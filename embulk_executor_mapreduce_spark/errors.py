@@ -34,6 +34,12 @@ class PartitionError(ConfigError):
     """Invalid partitioning configuration specifically."""
 
 
+class NotAMergeStateError(ConfigError, FileNotFoundError):
+    """A merge-state read, diff or tail named a path with no ``_CURRENT``
+    pointer. Both a config mistake (the spec names the wrong path) and a
+    missing file (there is no committed state to open)."""
+
+
 class RemoteTaskFailedError(EngineError):
     """A distributed task failed for infrastructure reasons (retryable)."""
 

@@ -54,6 +54,18 @@ PR_SCALE = 10**12
 _PR_COLLECT_MAX_EDGES = 65_536
 
 
+def _rank_schema(node_field, redistribute_dangling: bool):
+    """The ``(node, rank)`` schema of a driver-built result. Rank
+    nullability mirrors the loop's final select: the plain update is lit +
+    coalesce (non-nullable); the dangling share rides an integral-divide
+    expression, which Spark types nullable."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    return StructType(
+        [node_field, StructField("rank", LongType(), bool(redistribute_dangling))]
+    )
+
+
 def _pagerank_local(
     e: DataFrame,
     node_field,
@@ -82,18 +94,11 @@ def _pagerank_local(
         if s is None or d is None:
             return None
         edges.append((s, d))
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    spark = e.sparkSession
-    # rank nullability mirrors the loop's final select: the plain update
-    # is lit + coalesce (non-nullable); the dangling share rides an
-    # integral-divide expression, which Spark types nullable
-    schema = StructType(
-        [node_field, StructField("rank", LongType(), bool(redistribute_dangling))]
-    )
     nodes = {s for s, _ in edges} | {d for _, d in edges}
     if not nodes:
-        return spark.createDataFrame([], schema)
+        return e.sparkSession.createDataFrame(
+            [], _rank_schema(node_field, redistribute_dangling)
+        )
     n = n_nodes if n_nodes is not None else len(nodes)
     init = scale // n
     base = (damping_den - damping_num) * scale // (damping_den * n)
@@ -112,7 +117,9 @@ def _pagerank_local(
             dm = sum(rank for v, rank in ranks.items() if v not in outdeg)
             share = (dm * damping_num) // (damping_den * n)
         ranks = {v: base + contrib.get(v, 0) + share for v in nodes}
-    return spark.createDataFrame(sorted(ranks.items()), schema)
+    return e.sparkSession.createDataFrame(
+        sorted(ranks.items()), _rank_schema(node_field, redistribute_dangling)
+    )
 
 
 def pagerank(
@@ -212,6 +219,14 @@ def pagerank(
         ew = ew.repartition("src").persist()
     # planning-time scalar (node count), not row data
     n = n_nodes if n_nodes is not None else nodes.count()
+    if n == 0:  # empty edge set: nothing to rank, same frame as the local path
+        if not edges_distinct:
+            e.unpersist()
+            ew.unpersist()
+        nodes.unpersist()
+        return edges.sparkSession.createDataFrame(
+            [], _rank_schema(nodes.schema.fields[0], redistribute_dangling)
+        )
     init = scale // n
     base = (damping_den - damping_num) * scale // (damping_den * n)
     # lit() would type a small init as INT and rank*85 overflows under ANSI —

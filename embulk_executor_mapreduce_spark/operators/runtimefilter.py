@@ -259,19 +259,6 @@ def _bitmap_root(state_path: str) -> str:
     return os.path.join(_local(state_path), _BITMAP_DIR)
 
 
-def _state_version(state_path: str) -> int:
-    from ..errors import ConfigError
-    from ..sinks.writer import _local, _pointer_version
-
-    version = _pointer_version(_local(state_path))
-    if version is None:
-        raise ConfigError(
-            f"{state_path!r} is not a pointer-era merge state (no _CURRENT); "
-            "state bitmaps attach to merge-sink states only"
-        )
-    return version
-
-
 def write_state_bitmap(
     spark,
     state_path: str,
@@ -293,9 +280,9 @@ def write_state_bitmap(
     import time
     import uuid
 
-    from ..sinks.writer import _fsync_write, read_merge_state
+    from ..sinks.writer import _current_version, _fsync_write, read_merge_state
 
-    version = _state_version(state_path)
+    version = _current_version(state_path)
     root = _bitmap_root(state_path)
     target = os.path.join(root, f"v{version}")
     os.makedirs(root, exist_ok=True)
@@ -392,8 +379,9 @@ def read_state_bitmap(
     import os
 
     from ..errors import ConfigError
+    from ..sinks.writer import _current_version
 
-    version = _state_version(state_path)
+    version = _current_version(state_path)
     target = os.path.join(_bitmap_root(state_path), f"v{version}")
     meta_path = os.path.join(target, _BITMAP_META)
     if not os.path.exists(meta_path):

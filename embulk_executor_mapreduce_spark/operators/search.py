@@ -384,8 +384,8 @@ def bm25_topk_indexed(
       bucket count and columns come from the state's COMMITTED layout
       (``merge_state_layout`` — never a caller-supplied count, which
       could silently probe non-existent bucket ids; r14 review finding);
-      a layout that isn't term-bucketed, or a legacy state without a
-      recorded layout, degrades to the unpruned read — correct either
+      a layout that isn't term-bucketed, or a manifest that predates
+      layout stamping, degrades to the unpruned read — correct either
       way, the pruning is an optimization;
     * literal pushdown — ``term IN (...)`` reaches the parquet scan as a
       source filter (PushedFilters, plan-guarded), so row-group stats

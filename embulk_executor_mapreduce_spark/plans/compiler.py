@@ -258,7 +258,7 @@ def _run_cdc_tail(spark: SparkSession, spec: PipelineSpec) -> PipelineReport:
     from pyspark.sql import Observation
 
     from ..sinks.changes import COMMIT_VERSION_COL, table_changes
-    from ..sinks.writer import _fsync_write, _local, _merge_file_sink, _pointer_version
+    from ..sinks.writer import _current_version, _fsync_write, _merge_file_sink
     from ..spec import validate_table_changes_source
 
     src = spec.source
@@ -308,7 +308,6 @@ def _run_cdc_tail(spark: SparkSession, spec: PipelineSpec) -> PipelineReport:
         raise ConfigError(
             f"options.poll_seconds must be >= 0, got {poll_seconds}"
         )
-    local = _local(src.path)
     merge_mode = spec.sink.mode == "merge"
     version_sink = spec.sink
     if not merge_mode:
@@ -331,19 +330,7 @@ def _run_cdc_tail(spark: SparkSession, spec: PipelineSpec) -> PipelineReport:
         for poll in range(max_polls):
             if poll:
                 time.sleep(poll_seconds)
-            current = _pointer_version(local)
-            if current is None:
-                # config-shaped, not infra (r12 review finding 5). Accurate
-                # wording: a pre-pointer (legacy directory-swap) state may
-                # hold real data — it has no VERSIONS, which is what the
-                # tail consumes (one migrating merge commit fixes that).
-                raise ConfigError(
-                    f"table_changes path {src.path!r} has no version "
-                    "pointer — a pre-pointer (legacy) merge state or not a "
-                    "merge state at all; the tail consumes committed "
-                    "versions (one merge commit with the current sink "
-                    "migrates a legacy state)"
-                )
+            current = _current_version(src.path)
             to_v = current if src.to_version is None else min(current, src.to_version)
             for v in range(start + 1, to_v + 1):
                 inc = table_changes(
@@ -704,24 +691,20 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec) -> PipelineReport:
             from pathlib import Path
 
             if spec.sink.mode == "merge":
-                # pointer-era merge state: a recursive listing of the root
+                # merge state: a recursive listing of the root
                 # would sweep _trees/ across ALL retained versions (ADVICE
                 # r4 — over-counting by the previous snapshot's replaced
                 # bucket dirs); count only the dirs the CURRENT manifest
                 # references
                 from ..sinks.writer import (
+                    _current_version,
                     _load_manifest,
                     _local,
-                    _pointer_version,
                 )
 
                 local = _local(spec.sink.path)
-                version = _pointer_version(local)
-                if version is None:  # pre-pointer legacy flat layout
-                    roots = [Path(local)]
-                else:
-                    man = _load_manifest(local, version)
-                    roots = [Path(local) / rel for rel in man["buckets"].values()]
+                man = _load_manifest(local, _current_version(spec.sink.path))
+                roots = [Path(local) / rel for rel in man["buckets"].values()]
                 report.output_tasks = sum(
                     1
                     for root in roots

@@ -129,6 +129,19 @@ def run_independent_actions(*thunks):
     return results
 
 
+def _driver_memory_default(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset: 48g,
+    capped at 3/4 of the host's physical RAM (read with ``os.sysconf``) so
+    a local session never asks for a heap the machine cannot back; 48g
+    when the RAM size cannot be read."""
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, OSError, ValueError):
+            return "48g"
+    return f"{min(48 * 1024, phys_bytes * 3 // 4 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "embulk_executor_mapreduce_spark",
     shuffle_partitions: int | None = None,
@@ -153,7 +166,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _driver_memory_default()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # wide aggregates (e.g. 128-hash MinHash signatures) exceed the

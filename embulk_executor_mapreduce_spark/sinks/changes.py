@@ -48,11 +48,11 @@ from pyspark.sql import functions as F
 
 from .writer import (
     MERGE_BUCKET_COL,
+    _current_version,
     _fsync_write,
     _load_manifest,
     _local,
     _manifest_path,
-    _pointer_version,
 )
 
 CHANGE_TYPE_COL = "_change_type"
@@ -437,11 +437,7 @@ def materialize_changes(
     if keep_versions is not None and keep_versions < 1:
         raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
     local = _local(path)
-    current = _pointer_version(local)
-    if current is None:
-        raise FileNotFoundError(
-            f"{path} is a pre-pointer (legacy) state: no versions to diff"
-        )
+    current = _current_version(path)
     to_v = current if through_version is None else through_version
     cdir = os.path.join(local, CHANGELOG_DIR)
     os.makedirs(cdir, exist_ok=True)
@@ -647,11 +643,7 @@ def table_changes(
     formats (parquet/ORC) have no inference step and the provenances are
     bit-identical unconditionally."""
     local = _local(path)
-    current = _pointer_version(local)
-    if current is None:
-        raise FileNotFoundError(
-            f"{path} is a pre-pointer (legacy) state: no versions to diff"
-        )
+    current = _current_version(path)
     to_v = current if to_version is None else to_version
     if from_version > to_v:
         raise ValueError(f"from_version {from_version} > to_version {to_v}")

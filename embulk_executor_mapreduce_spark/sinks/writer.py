@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..errors import ConfigError
+from ..errors import ConfigError, NotAMergeStateError
 from ..spec import SinkSpec
 
 
@@ -57,8 +57,8 @@ def _local(path: str) -> str:
 
 
 def _pointer_version(local: str) -> int | None:
-    """Committed version from the ``_CURRENT`` pointer; None = pre-pointer
-    (legacy directory-swap) layout or no state at all."""
+    """Committed version from the ``_CURRENT`` pointer; None = no merge
+    state at this path."""
     import json
     import os
 
@@ -67,6 +67,17 @@ def _pointer_version(local: str) -> int | None:
         return None
     with open(p) as f:
         return int(json.load(f)["version"])
+
+
+def _current_version(path: str) -> int:
+    """Committed version of the merge state at ``path``; raises
+    :class:`...errors.NotAMergeStateError` when there is no pointer."""
+    v = _pointer_version(_local(path))
+    if v is None:
+        raise NotAMergeStateError(
+            f"{path!r} has no {_CURRENT_FILE} version pointer: not a merge state"
+        )
+    return v
 
 
 def _manifest_path(local: str, version: int) -> str:
@@ -136,10 +147,11 @@ def _stamp_schema(frame_schema, fmt: str) -> dict | None:
 
 def _stamped_schema(man: dict, fmt: str):
     """Resolve a manifest's committed-schema stamp to a ``StructType``, or
-    None (legacy manifest, or schema-on-read format). Zero Spark jobs and
-    zero file listing — this is the point: every commit/probe/read used to
-    pay a driver-side listing + footer (or full-snapshot) inference pass
-    just to learn a schema the writer already knew at commit time."""
+    None (a manifest that predates the stamp, or a schema-on-read format).
+    Zero Spark jobs and zero file listing — this is the point: every
+    commit/probe/read used to pay a driver-side listing + footer (or
+    full-snapshot) inference pass just to learn a schema the writer
+    already knew at commit time."""
     from pyspark.sql import types as T
 
     if fmt not in _SELF_DESCRIBING:
@@ -175,8 +187,7 @@ def read_merge_state(
     buckets: list[int] | None = None,
 ):
     """Resolve a merge-sink state for reading: follow ``_CURRENT`` →
-    manifest → explicit bucket-dir list (pointer-era layout), or fall back
-    to a plain load for pre-pointer states. This is the ONLY supported read
+    manifest → explicit bucket-dir list. This is the ONLY supported read
     path for ``mode: merge`` sinks — the data dirs live under
     underscore-prefixed directories that Spark's file listing deliberately
     ignores, so a naive ``spark.read.parquet(path)`` of a pointer-era state
@@ -200,24 +211,11 @@ def read_merge_state(
     ``buckets`` (r14 keyed-probe support): open ONLY these bucket ids'
     directories — the inverted-list read for states bucketed on a probe
     key (``SinkSpec.merge_bucket_columns``); derive the ids from literal
-    probe values with :func:`merge_bucket_ids`. Requires a pointer-era
-    state."""
-    local = _local(path)
-    current = _pointer_version(local)
-    if current is None:
-        if version is not None:
-            raise FileNotFoundError(
-                f"{path} is a pre-pointer (legacy) state: no versions to time-travel"
-            )
-        if buckets is not None:
-            raise FileNotFoundError(
-                f"{path} is a pre-pointer (legacy) state: no bucket manifest "
-                "to prune against"
-            )
-        df = spark.read.format(fmt).load(path)
-        return _drop_tombstones(df, delete_col)
+    probe values with :func:`merge_bucket_ids`."""
     import os
 
+    local = _local(path)
+    current = _current_version(path)
     v = current if version is None else version
     if not os.path.exists(_manifest_path(local, v)):
         raise FileNotFoundError(
@@ -260,9 +258,9 @@ def read_merge_state(
 
 def merge_state_layout(path: str) -> dict | None:
     """The committed bucket-hash layout of a merge state —
-    ``{"bucket_columns": [...], "n_buckets": N}`` — or None for legacy
-    manifests that predate layout stamping. Keyed probers MUST take
-    ``n_buckets`` from here rather than trusting a caller-supplied count:
+    ``{"bucket_columns": [...], "n_buckets": N}`` — or None when there is
+    no state, or its manifest predates layout stamping. Keyed probers MUST
+    take ``n_buckets`` from here rather than trusting a caller-supplied count:
     probing mod-64 against a mod-32 state maps some keys to bucket ids
     that simply don't exist, and the read treats absent ids as
     legitimately empty — silently missing rows (r14 review finding)."""
@@ -278,17 +276,12 @@ def merge_state_schema(spark, path: str, fmt: str = "parquet"):
     pointer → manifest ``schema`` stamp (r16 — zero Spark jobs), falling
     back for pre-stamp manifests to ONE bucket directory's parquet footers
     (all state files share a fused schema — evolution forces a full
-    rewrite, so any directory is authoritative). Raises for legacy/empty
-    states (no committed schema source)."""
+    rewrite, so any directory is authoritative). Raises when there is no
+    state or it has no committed buckets."""
     import os
 
     local = _local(path)
-    v = _pointer_version(local)
-    if v is None:
-        raise FileNotFoundError(
-            f"{path} is a pre-pointer (legacy) state: no committed schema"
-        )
-    man = _load_manifest(local, v)
+    man = _load_manifest(local, _current_version(path))
     stamped = _stamped_schema(man, fmt)
     if stamped is not None:
         return stamped
@@ -337,7 +330,7 @@ def merge_bucket_ids(
         if layout is None:
             raise FileNotFoundError(
                 f"{state_path} has no committed bucket layout to probe "
-                "against (legacy state — pass n_buckets explicitly)"
+                "against (pass n_buckets explicitly)"
             )
         bcols = [str(c) for c in layout["bucket_columns"]]
         if len(bcols) != len(df.columns):
@@ -430,10 +423,11 @@ def _gc_merge_state(
     stale_attempt_sec: float = _STALE_ATTEMPT_SEC,
 ) -> None:
     """Drop everything unreachable from the ``keep_versions`` newest
-    manifests: replaced bucket dirs, crash-orphaned trees/manifests from an
-    attempt that died before its pointer commit, and legacy-layout remnants
-    after a migration. Keeping N-1 alongside N gives concurrent readers a
-    one-commit grace window (the table-format snapshot-retention contract);
+    manifests under ``_trees/`` and ``_manifests/``: replaced bucket dirs
+    and crash-orphaned trees/manifests from an attempt that died before its
+    pointer commit. Nothing at the state root is touched. Keeping N-1
+    alongside N gives concurrent readers a one-commit grace window (the
+    table-format snapshot-retention contract);
     larger ``keep_versions`` buys time-travel depth at the cost of retained
     replaced-bucket storage.
 
@@ -498,47 +492,6 @@ def _gc_merge_state(
                     os.remove(os.path.join(mdir, name))
                 except FileNotFoundError:
                     pass
-    # legacy directory-swap remnants (post-migration): bucket dirs and bare
-    # data files at the state root are no longer reachable by any reader.
-    # Only KNOWN Spark write artifacts are swept (ADVICE r4: the old blanket
-    # "any non-pointer file" rule destroyed user-placed files like a README
-    # dropped at the state root on every GC pass).
-    for name in os.listdir(local):
-        full = os.path.join(local, name)
-        if name.startswith(f"{MERGE_BUCKET_COL}="):
-            shutil.rmtree(full, ignore_errors=True)
-        elif os.path.isfile(full) and (
-            name.startswith("part-")
-            or name.startswith(".part-")
-            or name == "_SUCCESS"
-            or name.endswith(".crc")
-        ):
-            os.remove(full)
-
-
-def _recover_merge_backup(local: str, backup: str) -> None:
-    """Crash recovery for the merge swap: any bucket directory stranded in
-    the backup dir whose live counterpart is MISSING was mid-swap when a
-    previous run died — restore it before merging (a leftover whose live dir
-    exists was already replaced and is safe to discard). A backup with no
-    live dir at all is the legacy whole-directory swap's crash window —
-    restore wholesale. Without this, a crash between the two renames left
-    the dataset invisible and the next run silently deleted the only copy
-    (ADVICE r2)."""
-    import os
-    import shutil
-
-    if not os.path.exists(backup):
-        return
-    if not os.path.exists(local):
-        os.rename(backup, local)
-        return
-    for name in os.listdir(backup):
-        if name.startswith(f"{MERGE_BUCKET_COL}="):
-            live_dir = os.path.join(local, name)
-            if not os.path.exists(live_dir):
-                os.rename(os.path.join(backup, name), live_dir)
-    shutil.rmtree(backup, ignore_errors=True)
 
 
 def _is_stale_snapshot_error(exc: BaseException) -> bool:
@@ -677,12 +630,10 @@ def _merge_file_sink(df: DataFrame, spec: SinkSpec) -> None:
     productionized — same conditional-commit loop; the keyed-argmax +
     pruned-rewrite plan is identical.
 
-    Pre-pointer states (bucketed ``__mb=*`` directory-swap era, or the
-    older unbucketed flat layout) are migrated in place: one full
-    merge-and-rewrite into ``_trees/v0`` + pointer, legacy files GC'd after
-    commit. A batch that INTRODUCES new columns likewise forces one full
-    rewrite (schema evolution = migration) so all state files share a fused
-    schema and readers need no ``mergeSchema``.
+    A pointer-less directory that already holds files is not a merge state
+    and is refused (a first commit would hide them). A batch that
+    INTRODUCES new columns forces one full rewrite so all state files share
+    a fused schema and readers need no ``mergeSchema``.
 
     KEYED DELETE (r14, VERDICT r13 item 2 — right-to-be-forgotten through
     the standing state without a snapshot rewrite):
@@ -699,19 +650,15 @@ def _merge_file_sink(df: DataFrame, spec: SinkSpec) -> None:
     live→tombstone as ``delete`` and tombstone→live as ``insert``
     (``table_changes(..., delete_col=...)``), and
     :func:`purge_tombstones` physically drops retired keys on whatever
-    grace schedule late-replay tolerance allows. Since r15 the knob is a
-    first-class ``SinkSpec`` field (``options["delete_column"]`` stays a
-    deprecation alias), as is ``merge_bucket_columns``; the pure-config
-    validation matrix lives in ``spec.validate_merge_sink_keying`` —
-    shared with ``PipelineSpec.validate`` so the YAML front door fails at
-    plan time — and only the data-dependent boolean-dtype check stays
-    here.
+    grace schedule late-replay tolerance allows. The knob is the
+    ``SinkSpec.delete_column`` field, as ``merge_bucket_columns`` is for
+    the bucket layout; the pure-config validation matrix lives in
+    ``spec.validate_merge_sink_keying`` — shared with
+    ``PipelineSpec.validate`` so the YAML front door fails at plan time —
+    and only the data-dependent boolean-dtype check stays here.
     """
     import os
-    import shutil
-    import uuid
 
-    from ..errors import MergeCommitConflictError
     from ..spec import validate_merge_sink_keying
 
     spark = df.sparkSession
@@ -721,15 +668,28 @@ def _merge_file_sink(df: DataFrame, spec: SinkSpec) -> None:
     order = list(spec.merge_order)
     validate_merge_sink_keying(spec)
     bucket_cols = list(spec.resolved_merge_bucket_columns())
-    delete_col = spec.resolved_delete_column()
+    delete_col = spec.delete_column
     if delete_col is not None:
         if delete_col in df.columns and dict(df.dtypes)[delete_col] != "boolean":
             raise ConfigError(
                 f"delete_column {delete_col!r} must be boolean, got "
                 f"{dict(df.dtypes)[delete_col]}"
             )
-    # heal a directory-swap-era crash before reading anything
-    _recover_merge_backup(local, local.rstrip("/") + ".__merge_old__")
+    # a first commit into a directory that already holds data would write
+    # v0 beside those files and hide them from every reader
+    if (
+        _pointer_version(local) is None
+        and os.path.isdir(local)
+        and any(
+            n.startswith(f"{MERGE_BUCKET_COL}=") or not n.startswith(("_", "."))
+            for n in os.listdir(local)
+        )
+    ):
+        raise ConfigError(
+            f"merge sink {path}: the directory holds files but no "
+            f"{_CURRENT_FILE} pointer, so it is not a merge state; merge into "
+            "a new or empty path"
+        )
 
     # bucket on merge_bucket_columns (default: the full merge key). A
     # STRICT SUBSET serves keyed-probe layouts — e.g. a postings index
@@ -798,14 +758,6 @@ def _merge_file_sink_attempts(
             local, _TREE_DIR, f"{_INPROGRESS_PREFIX}{uuid.uuid4().hex[:12]}"
         )
         try:
-            legacy = (
-                version is None
-                and os.path.isdir(local)
-                and any(
-                    n.startswith(f"{MERGE_BUCKET_COL}=") or not n.startswith(("_", "."))
-                    for n in os.listdir(local)
-                )
-            )
             touched: list[int] | None = None
             old = None
             bucket_dirs: dict[str, str] = {}
@@ -825,8 +777,8 @@ def _merge_file_sink_attempts(
                 # lives in a bucket the merge never loads, and the state
                 # ends up with duplicate keys. A recorded layout that
                 # differs from the spec is an error unless the caller
-                # opts into an explicit full-rewrite migration. Legacy
-                # manifests (no layout) can't be validated — the layout
+                # opts into an explicit full-rewrite migration. Manifests
+                # without a layout stamp can't be validated — the layout
                 # is stamped from this commit on.
                 committed_layout = man.get("layout")
                 relayout = (
@@ -911,8 +863,6 @@ def _merge_file_sink_attempts(
                         if tdirs
                         else None
                     )
-            elif legacy:
-                old = spark.read.format(spec.type).load(path)
             if old is not None:
                 old = old.drop(MERGE_BUCKET_COL).withColumn("__gen", F.lit(0))
                 both = old.unionByName(new, allowMissingColumns=True)
@@ -1036,12 +986,7 @@ def _rewrite_without(spark, spec: SinkSpec, split, op_name: str) -> int:
 
     local = _local(spec.path)
     for _attempt in range(_MERGE_COMMIT_RETRIES):
-        version = _pointer_version(local)
-        if version is None:
-            raise FileNotFoundError(
-                f"{spec.path} is not a pointer-era merge state "
-                f"(nothing for {op_name} to rewrite)"
-            )
+        version = _current_version(spec.path)
         man = _load_manifest(local, version)
         bucket_dirs = man["buckets"]
         all_dirs = [os.path.join(local, rel) for rel in bucket_dirs.values()]
@@ -1173,7 +1118,7 @@ def purge_tombstones(spark, spec: SinkSpec) -> int:
 
     Returns the number of tombstone rows purged (0 = no commit made).
     """
-    marker = spec.resolved_delete_column()
+    marker = spec.delete_column
     if marker is None:
         raise ConfigError(
             "purge_tombstones requires delete_column on the sink spec "

@@ -520,7 +520,18 @@ def _read_source_dispatch(
         # CDC block must still fail as config with the same messages, not
         # as a ValueError/AnalysisException inside table_changes
         validate_table_changes_source(spec)
-        return _table_changes_config_shaped(spark, table_changes, spec)
+        # a path with no version pointer raises NotAMergeStateError, a
+        # ConfigError, so run_pipeline classifies it as config, not infra
+        return table_changes(
+            spark,
+            spec.path,
+            list(spec.keys),
+            from_version=spec.from_version,
+            to_version=spec.to_version,
+            fmt=spec.options.get("format", "parquet"),
+            per_version=spec.per_version,
+            use_changelog=spec.use_changelog,
+        )
     if spec.type == "merge_state":
         # direct read-back of the merge SINK's keyed state (r12): pointer →
         # manifest → explicit bucket-dir scan (sinks/writer.read_merge_state
@@ -618,29 +629,6 @@ def _reject_merge_state_path(spec: SourceSpec) -> None:
             "pointer); read it with `type: merge_state` — a plain "
             f"{spec.type} scan of a pointer-era state sees no files"
         )
-
-
-def _table_changes_config_shaped(spark: SparkSession, table_changes, spec: SourceSpec) -> DataFrame:
-    """Call the sinks API, re-shaping its accurate pre-pointer diagnostic
-    as ConfigError at the spec layer (r12 review: run_pipeline would
-    otherwise classify a config mistake as retryable infra; and a
-    pre-probe here would both double the pointer read and mislabel a
-    populated legacy state as 'nothing to read')."""
-    try:
-        return table_changes(
-            spark,
-            spec.path,
-            list(spec.keys),
-            from_version=spec.from_version,
-            to_version=spec.to_version,
-            fmt=spec.options.get("format", "parquet"),
-            per_version=spec.per_version,
-            use_changelog=spec.use_changelog,
-        )
-    except FileNotFoundError as exc:
-        if "pre-pointer" in str(exc):
-            raise ConfigError(str(exc)) from exc
-        raise
 
 
 def _read_json(spark: SparkSession, spec: SourceSpec) -> DataFrame:

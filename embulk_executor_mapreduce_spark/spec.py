@@ -224,43 +224,18 @@ class SinkSpec:
     # replays cannot resurrect newer deletes). The winning tombstone is
     # retained; the live view is read_merge_state(delete_col=...),
     # physical reclamation is purge_tombstones on the gc-grace schedule.
-    # options["delete_column"] remains a deprecation alias.
     delete_column: str | None = None
     # bucket the merge state on a SUBSET of merge_key (keyed-probe
     # layouts: a postings index keyed (term, doc_id) but bucketed by term
     # alone, so a query-time term probe opens only its terms' bucket
     # directories). Empty = the full merge key. Bucket membership must
-    # stay a pure function of the key. options["merge_bucket_columns"]
-    # remains a deprecation alias.
+    # stay a pure function of the key.
     merge_bucket_columns: tuple[str, ...] = ()
 
-    def resolved_delete_column(self) -> str | None:
-        """The effective tombstone-marker column: the first-class field,
-        falling back to the ``options["delete_column"]`` deprecation
-        alias (r14 spelling). Naming BOTH with different values is
-        ambiguous and raises rather than silently preferring one."""
-        opt = self.options.get("delete_column")
-        opt = None if opt is None else str(opt)
-        if self.delete_column is not None and opt is not None and opt != self.delete_column:
-            raise ConfigError(
-                f"delete_column named twice with different values: field "
-                f"{self.delete_column!r} vs options alias {opt!r}"
-            )
-        return self.delete_column if self.delete_column is not None else opt
-
     def resolved_merge_bucket_columns(self) -> tuple[str, ...]:
-        """The effective bucket-column subset: the first-class field,
-        falling back to the ``options["merge_bucket_columns"]``
-        deprecation alias, defaulting to the full merge key."""
-        field_v = tuple(str(c) for c in self.merge_bucket_columns)
-        opt = self.options.get("merge_bucket_columns")
-        opt_v = None if opt is None else tuple(str(c) for c in opt)
-        if field_v and opt_v is not None and opt_v != field_v:
-            raise ConfigError(
-                f"merge_bucket_columns named twice with different values: "
-                f"field {field_v} vs options alias {opt_v}"
-            )
-        return field_v or opt_v or tuple(str(c) for c in self.merge_key)
+        """The bucket-column subset: the field, defaulting to the full
+        merge key."""
+        return tuple(str(c) for c in self.merge_bucket_columns or self.merge_key)
 
 
 @dataclass(frozen=True)
@@ -399,6 +374,7 @@ class PipelineSpec:
                 "partition_overwrite: dynamic requires a partitioned sink layout "
                 "(partition_by or partition_by_bucket)"
             )
+        _reject_sink_option_keying(self.sink)
         if self.sink.mode == "merge":
             if self.sink.type not in ("parquet", "orc"):
                 raise ConfigError("merge mode requires a parquet or orc sink")
@@ -422,16 +398,10 @@ class PipelineSpec:
                 )
             validate_merge_sink_keying(self.sink)
         elif self.sink.type != "dedup_corpus" and (
-            # EXPLICIT spellings only (the bucket-column resolver's
-            # merge_key fallback must not fire here), but BOTH spellings:
-            # the options-dict alias gets the same plan-time rejection as
-            # the first-class field (r15 review finding — an aliased
-            # delete_column on an append sink was silently ignored while
-            # the field form raised)
+            # the fields themselves, not the bucket-column resolver (its
+            # merge_key default must not fire here)
             self.sink.delete_column is not None
-            or self.sink.options.get("delete_column") is not None
             or self.sink.merge_bucket_columns
-            or self.sink.options.get("merge_bucket_columns") is not None
         ):
             raise ConfigError(
                 "delete_column / merge_bucket_columns are merge-mode sink "
@@ -450,6 +420,18 @@ class PipelineSpec:
                 )
 
 
+def _reject_sink_option_keying(sink: SinkSpec) -> None:
+    """Refuse ``delete_column`` / ``merge_bucket_columns`` spelled as sink
+    ``options`` keys. They are SinkSpec fields, and an ignored
+    ``options.delete_column`` would merge a tombstone batch as live rows."""
+    for key in ("delete_column", "merge_bucket_columns"):
+        if key in sink.options:
+            raise ConfigError(
+                f"sink options.{key} is not supported; set the sink's "
+                f"{key} field instead"
+            )
+
+
 def validate_merge_sink_keying(sink: SinkSpec) -> None:
     """Plan-time ConfigError matrix for a merge sink's keying knobs
     (r15: moved here from the writer as part of promoting delete_column /
@@ -457,6 +439,7 @@ def validate_merge_sink_keying(sink: SinkSpec) -> None:
     ``write_sink`` can be called directly with a bare SinkSpec — the
     writer re-runs this so a malformed spec fails as config either way;
     PipelineSpec.validate runs it at plan time for the YAML front door."""
+    _reject_sink_option_keying(sink)
     keys = [str(c) for c in sink.merge_key]
     order = [str(c) for c in sink.merge_order]
     bucket_cols = list(sink.resolved_merge_bucket_columns())
@@ -467,7 +450,7 @@ def validate_merge_sink_keying(sink: SinkSpec) -> None:
             "function of the key (rows for one key never straddle buckets, "
             "and the manifest diff stays a superset of the changed keys)"
         )
-    delete_col = sink.resolved_delete_column()
+    delete_col = sink.delete_column
     if delete_col is not None:
         if delete_col in keys:
             raise ConfigError(

@@ -706,9 +706,7 @@ def _artifacts_ready(*paths: str) -> bool:
     retry fail permanently on read, whereas calling it absent lets the
     retry rebuild deterministically). A transient IO error on a COMMITTED
     artifact still surfaces at read time — the probe never wraps the read
-    in try/except (r13 review finding). Pre-pointer legacy merge layouts
-    are out of scope here: every state this module consults is written by
-    this module's own pointer-protocol ``write_sink`` calls."""
+    in try/except (r13 review finding)."""
     import os
 
     from ..sinks.writer import _local, _pointer_version
@@ -727,21 +725,8 @@ def _artifacts_ready(*paths: str) -> bool:
 #: fused catch-up chunk size (r17, guide §1.2/§2.6): a multi-version
 #: catch-up computes at most this many adjacent-pair diffs as ONE
 #: persisted span plan instead of one plan per version. Bounds the span
-#: cache at chunk_size commits' changed rows — raise it for deployments
-#: whose per-commit deltas are small and catch-ups long, lower it toward 1
-#: to reproduce the per-version legacy shape exactly.
-_FUSE_SPAN_ENV = "SPARK_GRAFT_CDC_FUSE_SPAN"
-_FUSE_SPAN_DEFAULT = 16
-
-
-def _fuse_span() -> int:
-    import os
-
-    raw = os.environ.get(_FUSE_SPAN_ENV, "")
-    try:
-        return max(1, int(raw)) if raw else _FUSE_SPAN_DEFAULT
-    except ValueError:
-        return _FUSE_SPAN_DEFAULT
+#: cache at this many commits' changed rows.
+_FUSE_SPAN = 16
 
 
 def _tail_versions(
@@ -768,7 +753,7 @@ def _tail_versions(
     FUSED CATCH-UP (r17 optimization, guide §1.2/§2.6 — VERDICT r16 item
     1): with ``span_feed`` given, a catch-up of ≥2 pending versions
     computes its per-pair diffs as ONE ``table_changes(start, to,
-    per_version=True)`` plan per ≤``SPARK_GRAFT_CDC_FUSE_SPAN`` chunk,
+    per_version=True)`` plan per ≤``_FUSE_SPAN`` chunk,
     persisted once; each version's increment is then a filter on
     ``_commit_version`` over the cached span, and version presence (the
     per-version emptiness probe) comes from ONE distinct-collect instead
@@ -784,18 +769,17 @@ def _tail_versions(
     ``span_feed(lo, hi)`` returns the composition's version-tagged feed
     for ``(lo, hi]`` — already filtered/projected exactly like its
     per-version batch, PLUS the ``_commit_version`` column, so a version
-    absent from the span is precisely one whose legacy emptiness probe
-    would have skipped it. ``apply(v, batch)``: ``batch`` is the
-    (non-empty) cached span slice in fused mode, or None in legacy mode
-    (``apply`` computes and probes its own per-version feed — the path a
-    1-version tail and ``SPARK_GRAFT_CDC_FUSE_SPAN=1`` take).
+    absent from the span is precisely one whose per-version emptiness
+    probe would have skipped it. ``apply(v, batch)``: ``batch`` is the
+    (non-empty) cached span slice in fused mode, or None in per-version
+    mode (``apply`` computes and probes its own per-version feed — the
+    path a 1-version tail and a ``span_feed=None`` caller take).
 
     ``max_span``: a composition-specific ceiling on the chunk size —
-    the shared env default is tuned for row-light feeds (postings rows,
+    the shared default is tuned for row-light feeds (postings rows,
     vectors); a PAYLOAD-heavy feed (the image composition: raw encoded
     bytes ride the span cache until its last version applies) passes a
-    lower bound so the pinned bytes stay ~that many commits deep
-    regardless of the env setting."""
+    lower bound so the pinned bytes stay ~that many commits deep."""
     import json as _json
     import os
     import tempfile
@@ -803,7 +787,7 @@ def _tail_versions(
     from ..errors import ConfigError
     from ..session import aqe_cached_plan_scope
     from ..sinks.changes import COMMIT_VERSION_COL
-    from ..sinks.writer import _fsync_write, _local, _pointer_version
+    from ..sinks.writer import _current_version, _fsync_write
 
     ck_dir = checkpoint or tempfile.mkdtemp(prefix=tmp_prefix)
     os.makedirs(ck_dir, exist_ok=True)
@@ -820,16 +804,10 @@ def _tail_versions(
             "to restart from from_version (per-version delivery is "
             "idempotent)"
         ) from exc
-    current = _pointer_version(_local(source_path))
-    if current is None:
-        raise ConfigError(
-            f"table_changes path {source_path!r} has no version pointer — "
-            "a pre-pointer (legacy) merge state or not a merge state at "
-            "all; the tail consumes committed versions"
-        )
+    current = _current_version(source_path)
     to_v = current if to_version is None else min(current, to_version)
     last = start
-    chunk = _fuse_span()
+    chunk = _FUSE_SPAN
     if max_span is not None:
         chunk = min(chunk, max(1, max_span))
     if span_feed is None or chunk < 2 or to_v - start < 2:
@@ -863,8 +841,8 @@ def _tail_versions(
                             ).drop(COMMIT_VERSION_COL),
                         )
                     # an absent version is an empty increment: checkpoint
-                    # advances, no writes (the legacy per-version probe's
-                    # exact skip rule)
+                    # advances, no writes (the per-version probe's exact
+                    # skip rule)
                     _fsync_write(ck_file, _json.dumps({"last_version": v}))
                     last = v
             finally:

@@ -2,9 +2,10 @@
 computes its per-pair diffs as ONE persisted span plan per chunk instead
 of one plan + emptiness probe per version. These tests pin the contract:
 the fused path is value-invisible — same index/state/corpus content as
-the per-version legacy path (``SPARK_GRAFT_CDC_FUSE_SPAN=1``), empty
-versions still advance the checkpoint without a state bump, chunking
-splits a long catch-up without changing results, and a resume mid-span
+driving the tail one version per call (each call then has a single
+pending version and takes the per-version path), empty versions still
+advance the checkpoint without a state bump, splitting a catch-up into
+several spans does not change results, and a resume mid-catch-up
 converges to the one-shot result."""
 
 from __future__ import annotations
@@ -39,46 +40,41 @@ def _postings_upstream(spark, tmp_path):
     return up
 
 
-def test_fused_postings_matches_per_version(spark, tmp_path, monkeypatch):
+def _ingest(spark, up, root, ck, to_version=None):
+    return run_cdc_postings_ingest(
+        spark, str(up), ["doc_id"], str(root), checkpoint=str(ck),
+        to_version=to_version, delete_col="_del",
+    )
+
+
+def test_fused_postings_matches_per_version(spark, tmp_path):
     """The fused span feed must be value-invisible: index + stats after a
-    fused 4-version catch-up equal the per-version (span=1) replay of the
+    fused 4-version catch-up equal a one-version-per-call replay of the
     same upstream — including the delete cascade and the empty v4."""
     up = _postings_upstream(spark, tmp_path)
     fused_root = tmp_path / "ix_fused"
-    assert run_cdc_postings_ingest(
-        spark, str(up), ["doc_id"], str(fused_root),
-        checkpoint=str(tmp_path / "ck_fused"), delete_col="_del",
-    ) == 4
-    monkeypatch.setenv("SPARK_GRAFT_CDC_FUSE_SPAN", "1")
-    legacy_root = tmp_path / "ix_legacy"
-    assert run_cdc_postings_ingest(
-        spark, str(up), ["doc_id"], str(legacy_root),
-        checkpoint=str(tmp_path / "ck_legacy"), delete_col="_del",
-    ) == 4
-    assert _probe(spark, fused_root, k=30) == _probe(spark, legacy_root, k=30)
+    assert _ingest(spark, up, fused_root, tmp_path / "ck_fused") == 4
+    single_root = tmp_path / "ix_single"
+    for v in (1, 2, 3, 4):
+        assert _ingest(spark, up, single_root, tmp_path / "ck_single", v) == v
+    assert _probe(spark, fused_root, k=30) == _probe(spark, single_root, k=30)
     # the empty v4 advanced the checkpoint without a stats dir / postings
     # version on BOTH paths
-    for root in (fused_root, legacy_root):
+    for root in (fused_root, single_root):
         stats = sorted(os.listdir(os.path.join(str(root), "stats")))
         assert stats and all(not d.endswith("v4") for d in stats)
 
 
-def test_fused_postings_chunked_span_matches(spark, tmp_path, monkeypatch):
-    """SPARK_GRAFT_CDC_FUSE_SPAN=2 over 4 pending versions (two chunks,
-    the second starting from the first's committed state) reproduces the
-    one-chunk result."""
+def test_fused_postings_chunked_span_matches(spark, tmp_path):
+    """A 4-version catch-up driven as two fused spans of 2 (the second
+    starting from the first's committed state) reproduces the one-span
+    result."""
     up = _postings_upstream(spark, tmp_path)
     one_root = tmp_path / "ix_one"
-    run_cdc_postings_ingest(
-        spark, str(up), ["doc_id"], str(one_root),
-        checkpoint=str(tmp_path / "ck_one"), delete_col="_del",
-    )
-    monkeypatch.setenv("SPARK_GRAFT_CDC_FUSE_SPAN", "2")
+    assert _ingest(spark, up, one_root, tmp_path / "ck_one") == 4
     two_root = tmp_path / "ix_two"
-    assert run_cdc_postings_ingest(
-        spark, str(up), ["doc_id"], str(two_root),
-        checkpoint=str(tmp_path / "ck_two"), delete_col="_del",
-    ) == 4
+    assert _ingest(spark, up, two_root, tmp_path / "ck_two", 2) == 2
+    assert _ingest(spark, up, two_root, tmp_path / "ck_two") == 4
     assert _probe(spark, one_root, k=30) == _probe(spark, two_root, k=30)
 
 
@@ -93,19 +89,17 @@ def _state_rows(spark, state):
     )
 
 
-def test_fused_image_matches_per_version_and_resumes(spark, tmp_path, monkeypatch):
+def test_fused_image_matches_per_version_and_resumes(spark, tmp_path):
     """The image composition's fused catch-up keeps the per-version claim
     semantics (batch 2's state probe sees batch 1's committed rows, never
-    its own claims) and a resume that already committed version 1 fuses
-    only the remainder — all three drives land on identical state +
-    corpus content."""
+    its own claims): a fused 2-version drive and a resumed drive (version
+    1 alone, then the rest — one version per call, the per-version path)
+    land on identical state + corpus content."""
     up = _upstream(spark, tmp_path)
     f_state, f_corpus, f_ckpt = _paths(tmp_path, "fused")
     assert run_cdc_image_ingest(
         spark, up, ["img_id"], f_state, f_corpus, checkpoint=f_ckpt
     ) == 2
-    # resume: version 1 delivered alone (legacy single-version path), the
-    # rest caught up afterwards
     r_state, r_corpus, r_ckpt = _paths(tmp_path, "resumed")
     assert run_cdc_image_ingest(
         spark, up, ["img_id"], r_state, r_corpus, checkpoint=r_ckpt,
@@ -114,22 +108,12 @@ def test_fused_image_matches_per_version_and_resumes(spark, tmp_path, monkeypatc
     assert run_cdc_image_ingest(
         spark, up, ["img_id"], r_state, r_corpus, checkpoint=r_ckpt
     ) == 2
-    monkeypatch.setenv("SPARK_GRAFT_CDC_FUSE_SPAN", "1")
-    l_state, l_corpus, l_ckpt = _paths(tmp_path, "legacy")
-    assert run_cdc_image_ingest(
-        spark, up, ["img_id"], l_state, l_corpus, checkpoint=l_ckpt
-    ) == 2
-    want = _state_rows(spark, l_state)
-    assert _state_rows(spark, f_state) == want
-    assert _state_rows(spark, r_state) == want
-    for corpus in (f_corpus, r_corpus):
-        for v in (1, 2):
-            assert sorted(
-                r["img_id"]
-                for r in spark.read.parquet(f"{corpus}/ingest_batch={v}").collect()
-            ) == sorted(
-                r["img_id"]
-                for r in spark.read.parquet(
-                    f"{l_corpus}/ingest_batch={v}"
-                ).collect()
-            )
+    assert _state_rows(spark, f_state) == _state_rows(spark, r_state)
+    for v in (1, 2):
+        assert sorted(
+            r["img_id"]
+            for r in spark.read.parquet(f"{f_corpus}/ingest_batch={v}").collect()
+        ) == sorted(
+            r["img_id"]
+            for r in spark.read.parquet(f"{r_corpus}/ingest_batch={v}").collect()
+        )

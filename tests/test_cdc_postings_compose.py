@@ -43,7 +43,7 @@ def _upstream_sink(path):
         merge_key=("doc_id",),
         merge_order=("rev",),
         merge_keep_versions=6,
-        options={"delete_column": "_del"},
+        delete_column="_del",
     )
 
 

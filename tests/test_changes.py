@@ -1,7 +1,7 @@
 """CDC change feed over the merge sink (sinks/changes.py): snapshot-diff
 classification (incl. deletes and NULL transitions the catalog query can't
 exercise — the merge sink never deletes), changed-bucket pruning proven via
-the files the diff actually reads, and the retention/legacy error paths."""
+the files the diff actually reads, and the retention/no-state error paths."""
 
 from __future__ import annotations
 
@@ -244,7 +244,7 @@ def test_table_changes_error_paths(spark, state):
         table_changes(spark, state, ["k"], 1, 0)
     with pytest.raises(FileNotFoundError, match="merge_keep_versions"):
         table_changes(spark, state, ["k"], 0, 99)
-    with pytest.raises(FileNotFoundError, match="legacy"):
+    with pytest.raises(FileNotFoundError, match="not a merge state"):
         table_changes(spark, tempfile.mkdtemp(prefix="tc_nostate_"), ["k"], 0)
 
 
@@ -696,7 +696,7 @@ def test_changelog_schema_on_read_evolution_not_silently_dropped(
 
 
 def test_materialize_changes_legacy_state_raises(spark, tmp_path):
-    with pytest.raises(FileNotFoundError, match="pre-pointer"):
+    with pytest.raises(FileNotFoundError, match="not a merge state"):
         materialize_changes(spark, str(tmp_path / "nope"), ["k"])
 
 

@@ -128,6 +128,25 @@ def test_pagerank_driver_path_dispatch_and_fallbacks(spark, monkeypatch):
     assert not local_runs
 
 
+@pytest.mark.parametrize("redistribute", [False, True])
+def test_pagerank_empty_edges_same_on_every_path(spark, monkeypatch, redistribute):
+    """An empty edge set with no n_nodes hint ranks nothing: the driver
+    path, the distributed loop and its checkpoint=False form all return
+    the same empty, schema-equal frame."""
+    from embulk_executor_mapreduce_spark.operators import graph as G
+
+    empty = spark.createDataFrame([], "src long, dst long")
+    local = pagerank(empty, iters=2, redistribute_dangling=redistribute)
+    no_ck = pagerank(
+        empty, iters=2, redistribute_dangling=redistribute, checkpoint=False
+    )
+    monkeypatch.setattr(G, "_pagerank_local", lambda *a, **kw: None)
+    loop = pagerank(empty, iters=2, redistribute_dangling=redistribute)
+    for got in (no_ck, loop):
+        assert got.schema == local.schema
+        assert got.collect() == local.collect() == []
+
+
 def test_pagerank_mass_and_determinism(spark):
     edges = _pseudo_edges(n_nodes=200)
     df = spark.createDataFrame(edges, "src long, dst long")

@@ -34,7 +34,7 @@ def _sink(path, **kw):
         merge_order=("rev",),
         merge_buckets=8,
         merge_keep_versions=8,
-        options={"delete_column": "_deleted"},
+        delete_column="_deleted",
         **kw,
     )
 
@@ -237,7 +237,7 @@ def test_bucket_layout_drift_is_rejected(spark, tmp_path):
 
     p = str(tmp_path / "state")
 
-    def sink(buckets, **opts):
+    def sink(buckets, delete_column=None, **opts):
         return SinkSpec(
             type="parquet",
             path=p,
@@ -245,6 +245,7 @@ def test_bucket_layout_drift_is_rejected(spark, tmp_path):
             merge_key=("k",),
             merge_order=("rev",),
             merge_buckets=buckets,
+            delete_column=delete_column,
             options=opts,
         )
 
@@ -279,21 +280,21 @@ def test_delete_column_validation(spark, tmp_path):
     with pytest.raises(ConfigError, match="merge_key"):
         write_sink(
             df,
-            SinkSpec(merge_key=("k", "_deleted"), options={"delete_column": "_deleted"}, **base),
+            SinkSpec(merge_key=("k", "_deleted"), delete_column="_deleted", **base),
         )
     with pytest.raises(ConfigError, match="merge_order"):
         write_sink(
             df,
             SinkSpec(
                 merge_key=("k",),
-                options={"delete_column": "rev"},
+                delete_column="rev",
                 **base,
             ),
         )
     with pytest.raises(ConfigError, match="boolean"):
         write_sink(
             df.withColumn("_deleted", F.lit(1)),
-            SinkSpec(merge_key=("k",), options={"delete_column": "_deleted"}, **base),
+            SinkSpec(merge_key=("k",), delete_column="_deleted", **base),
         )
     with pytest.raises(ConfigError, match="delete_column"):
         purge_tombstones(
@@ -343,7 +344,7 @@ def test_tombstone_argmax_matches_reference_model(spark, tmp_path_factory, batch
         merge_order=("rev",),
         merge_buckets=4,
         merge_keep_versions=8,
-        options={"delete_column": "_deleted"},
+        delete_column="_deleted",
     )
     model: dict[int, tuple] = {}  # k -> (rev, gen_is_batch, v, dead)
     for batch in batches:
@@ -372,43 +373,36 @@ def test_tombstone_argmax_matches_reference_model(spark, tmp_path_factory, batch
     assert _live(spark, p) == want_live
 
 
-def test_first_class_fields_and_options_alias_equivalent(spark, tmp_path):
-    """r15 (VERDICT r14 item 4): delete_column / merge_bucket_columns are
-    first-class SinkSpec fields; the r14 options-dict spelling remains a
-    deprecation alias resolving to the SAME semantics AND the same
-    committed layout (an alias-written state merged under the field form
-    must not trip the relayout drift guard)."""
-    from embulk_executor_mapreduce_spark.sinks.writer import (
-        merge_state_layout,
-    )
+#: the pre-field spellings of the two merge keying fields, as options keys
+_OPTION_ALIASES = (
+    {"options": {"delete_column": "_deleted"}},
+    {"options": {"merge_bucket_columns": ["k"]}},
+)
+
+
+def test_options_alias_rejected_on_merge_sink(spark, tmp_path):
+    """delete_column / merge_bucket_columns are SinkSpec fields only; the
+    options-dict spelling raises at plan time and on a direct write_sink
+    call, naming the field to use, before anything is written — ignoring
+    it would merge a tombstone batch as live rows."""
+    from embulk_executor_mapreduce_spark.spec import load_spec
 
     p = str(tmp_path / "s")
-    field_sink = SinkSpec(
-        type="parquet", path=p, mode="merge",
-        merge_key=("k",), merge_order=("rev",), merge_buckets=8,
-        delete_column="_deleted", merge_bucket_columns=("k",),
-    )
-    alias_sink = _sink(p)  # options={"delete_column": "_deleted"}
-    assert field_sink.resolved_delete_column() == "_deleted"
-    assert field_sink.resolved_merge_bucket_columns() == ("k",)
-    assert alias_sink.resolved_delete_column() == "_deleted"
-    assert alias_sink.resolved_merge_bucket_columns() == ("k",)
-    write_sink(_batch(spark, [(1, "a", 0, False), (2, "b", 0, False)]), field_sink)
-    assert merge_state_layout(p) == {"bucket_columns": ["k"], "n_buckets": 8}
-    # alias form merges into the field-written state without relayout
-    write_sink(_batch(spark, [(1, None, 1, True)]), alias_sink)
-    live = read_merge_state(spark, p, delete_col="_deleted")
-    assert {r.k for r in live.collect()} == {2}
-    # naming both with DIFFERENT values is ambiguous config, not a pick
-    import pytest as _pytest
-
-    both = SinkSpec(
-        type="parquet", path=p, mode="merge",
-        merge_key=("k",), merge_order=("rev",),
-        delete_column="_deleted", options={"delete_column": "_other"},
-    )
-    with _pytest.raises(ConfigError, match="named twice"):
-        both.resolved_delete_column()
+    for knob in _OPTION_ALIASES:
+        (key,) = knob["options"]
+        out = {
+            "type": "parquet", "path": p, "mode": "merge",
+            "merge_key": ["k"], "merge_order": ["rev"], **knob,
+        }
+        with pytest.raises(ConfigError, match=f"{key} field instead"):
+            load_spec({"in": {"type": "parquet", "path": "/tmp/x"}, "out": out})
+        sink = SinkSpec(
+            type="parquet", path=p, mode="merge",
+            merge_key=("k",), merge_order=("rev",), **knob,
+        )
+        with pytest.raises(ConfigError, match=f"{key} field instead"):
+            write_sink(_batch(spark, [(1, None, 1, True)]), sink)
+    assert not os.path.exists(p)
 
 
 def test_yaml_front_door_merge_delete_fields(spark, tmp_path):
@@ -475,19 +469,13 @@ def test_yaml_front_door_merge_delete_fields(spark, tmp_path):
 
 
 def test_options_alias_rejected_on_non_merge_sink_at_plan_time():
-    """r15 review finding: the options-dict deprecation alias must get
-    the SAME plan-time rejection as the first-class field on a non-merge
-    sink — an aliased delete_column on an append sink was silently
-    ignored while the field spelling raised."""
-    import pytest as _pytest
-
+    """The options-dict spelling is rejected on non-merge sinks too,
+    naming the field — it is never silently ignored."""
     from embulk_executor_mapreduce_spark.spec import load_spec
 
-    for knob in (
-        {"options": {"delete_column": "_deleted"}},
-        {"options": {"merge_bucket_columns": ["k"]}},
-    ):
-        with _pytest.raises(ConfigError, match="merge-mode"):
+    for knob in _OPTION_ALIASES:
+        (key,) = knob["options"]
+        with pytest.raises(ConfigError, match=f"{key} field instead"):
             load_spec({
                 "in": {"type": "parquet", "path": "/tmp/x"},
                 "out": {"type": "parquet", "path": "/tmp/y", **knob},

@@ -612,42 +612,41 @@ def test_merge_sink_concurrent_reader_sees_old_or_new_never_mix(spark, tmp_path)
     assert new_view[3] == ("n3", 1)
 
 
-def test_merge_sink_legacy_migration_and_stranded_backup(spark, tmp_path):
-    """Pre-pointer states migrate in place on the next merge: a bucketed
-    directory-swap-era layout (here with one bucket stranded in
-    .__merge_old__ by a mid-swap crash — ADVICE r2) is healed, fully
-    rewritten into _trees/v0, pointer-committed, and the legacy dirs GC'd."""
-    import os
-    import shutil
+def test_merge_into_pointerless_dir_with_data_is_refused(spark, tmp_path):
+    """A directory that holds files but no _CURRENT pointer is not a merge
+    state: a first commit would write v0 beside those files and hide
+    them. Both a hand-made bucketed (``__mb=*``) layout and a flat parquet
+    dir make the merge raise ConfigError, and every file stays
+    byte-identical."""
+    import hashlib
 
-    from embulk_executor_mapreduce_spark.sinks.writer import read_merge_state
     from pyspark.sql import functions as F
 
-    out = str(tmp_path / "state")
-    # craft the round-3-era layout by hand: __mb=<b> partition dirs
+    def snapshot(root):
+        return {
+            str(p.relative_to(root)): hashlib.sha256(p.read_bytes()).hexdigest()
+            for p in sorted(Path(root).rglob("*"))
+            if p.is_file()
+        }
+
     seed = spark.createDataFrame(
         [(i, f"n{i}", 1) for i in range(40)], "id long, name string, ver long"
-    ).withColumn("__mb", F.pmod(F.xxhash64("id"), F.lit(16)).cast("int"))
-    seed.write.partitionBy("__mb").parquet(out)
-    # strand one bucket in the backup dir (crash between the two renames)
-    backup = out + ".__merge_old__"
-    os.makedirs(backup)
-    victim = next(d for d in sorted(os.listdir(out)) if d.startswith("__mb="))
-    shutil.move(os.path.join(out, victim), os.path.join(backup, victim))
-
+    )
+    bucketed = str(tmp_path / "bucketed")
+    seed.withColumn(
+        "__mb", F.pmod(F.xxhash64("id"), F.lit(16)).cast("int")
+    ).write.partitionBy("__mb").parquet(bucketed)
+    flat = str(tmp_path / "flat")
+    seed.write.parquet(flat)
     src = str(tmp_path / "b1")
     spark.createDataFrame(
         [(100, "new", 1)], "id long, name string, ver long"
     ).coalesce(1).write.mode("overwrite").parquet(src)
-    run_pipeline(spark, _merge_spec(src, out, merge_buckets=16))
-
-    assert not os.path.exists(backup)
-    assert os.path.exists(os.path.join(out, "_CURRENT"))
-    # legacy remnants gone after the migration commit's GC
-    assert not any(n.startswith("__mb=") for n in os.listdir(out))
-    state = {r.id: (r.name, r.ver) for r in read_merge_state(spark, out).collect()}
-    assert len(state) == 41  # every seeded key (incl. stranded bucket) + new
-    assert state[100] == ("new", 1)
+    for out in (bucketed, flat):
+        before = snapshot(out)
+        with pytest.raises(ConfigError, match="not a merge state"):
+            run_pipeline(spark, _merge_spec(src, out, merge_buckets=16))
+        assert snapshot(out) == before
 
 
 def test_merge_sink_config_validation(spark, tmp_path):
@@ -1338,10 +1337,9 @@ def test_merge_sink_randomized_crash_replay(spark, tmp_path, monkeypatch):
 
 
 def test_merge_gc_preserves_user_files_at_state_root(spark, tmp_path):
-    """ADVICE r4: the legacy-remnant sweep in _gc_merge_state must only
-    delete KNOWN Spark write artifacts (part-*, _SUCCESS, *.crc, __mb=*
-    dirs) — a README or tool marker a user drops at the state root has to
-    survive every GC pass."""
+    """ADVICE r4: _gc_merge_state sweeps only _trees/ and _manifests/ — a
+    README, a tool marker or any other file at the state root survives
+    every GC pass."""
     out = str(tmp_path / "state")
 
     def batch(rows, sub):
@@ -1354,12 +1352,10 @@ def test_merge_gc_preserves_user_files_at_state_root(spark, tmp_path):
     batch([(1, "a", 1)], 0)
     (Path(out) / "README.md").write_text("operator notes")
     (Path(out) / "_custom_marker").write_text("x")
-    # a legacy flat-layout remnant IS a known Spark artifact: still swept
     (Path(out) / "part-00099-deadbeef.parquet").write_text("junk")
     batch([(2, "b", 1)], 1)  # commit triggers GC
     names = {p.name for p in Path(out).iterdir()}
-    assert "README.md" in names and "_custom_marker" in names
-    assert not any(n.startswith("part-") for n in names)
+    assert {"README.md", "_custom_marker", "part-00099-deadbeef.parquet"} <= names
     # and the state is still fully readable through the pointer
     from embulk_executor_mapreduce_spark.sinks.writer import read_merge_state
 

@@ -863,7 +863,7 @@ def test_merge_delete_live_read_pushes_marker_filter(spark, tmp_path):
         mode="merge",
         merge_key=("k",),
         merge_order=("rev",),
-        options={"delete_column": "_deleted"},
+        delete_column="_deleted",
     )
     write_sink(
         spark.createDataFrame(

@@ -1,11 +1,10 @@
-"""Streaming semantics + progress collection."""
+"""Streaming semantics."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from embulk_executor_mapreduce_spark.catalog import events_ts_normalize_filters
-from embulk_executor_mapreduce_spark.reports import ProgressMonitor
 from embulk_executor_mapreduce_spark.streaming.ingest import (
     read_events_stream,
     run_stream_to_memory,
@@ -71,23 +70,6 @@ def test_stream_nanos_normalization_exact_for_pre_epoch(spark, tmp_path):
         for k, v in enumerate(nanos)
     }
     assert got == want
-
-
-def test_progress_monitor_sees_tasks(spark):
-    # needs a job slow enough to sample: sf0.1 lineitem with two shuffles
-    li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
-    mon = ProgressMonitor(spark, interval=0.01)
-    trail = mon.run(
-        lambda: li.repartition(32, "l_orderkey")
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("q"))
-        .count()
-    )
-    assert trail.result > 0
-    assert trail.wall_seconds > 0
-    assert trail.samples, "no progress samples collected"
-    assert all(s.num_tasks > 0 for s in trail.samples)
-    assert not trail.any_failures()
 
 
 def test_stateful_rollup_final_equals_batch(spark):
