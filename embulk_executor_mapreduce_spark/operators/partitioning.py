@@ -245,42 +245,6 @@ def spread_narrow(df: DataFrame, key_col: str) -> DataFrame:
     return df.repartition(n_par, F.xxhash64(F.col(key_col)))
 
 
-def repartition_by_bucket(
-    df: DataFrame,
-    column: str,
-    unit: str = "hour",
-    unix_timestamp_unit: str = "sec",
-    reducers: int | None = None,
-    map_side_partition_split: int = 1,
-    bucket_col: str = "__bucket",
-    keep_bucket: bool = False,
-) -> DataFrame:
-    """The reference's shuffle shape: records sharing a time bucket are routed
-    together (one output transaction per reduce task,
-    ``EmbulkPartitioningMapReduce.java:156-183``), optionally salted.
-
-    ``reducers`` defaults to the input parallelism like the reference
-    (``MapReduceExecutor.java:98``). Returns the repartitioned frame; the
-    bucket column is dropped unless ``keep_bucket``.
-    """
-    if reducers is not None and reducers <= 0:
-        raise PartitionError(f"reducers must be > 0, got {reducers}")
-    # defaultParallelism, not df.rdd.getNumPartitions(): the latter forces an
-    # RDD conversion of the whole plan at compile time (same fix as the
-    # pipeline compiler's reducer default)
-    n = reducers or df.sparkSession.sparkContext.defaultParallelism or 1
-    out = df.withColumn(bucket_col, bucket_expr(df, column, unit, unix_timestamp_unit))
-    keys = [bucket_col]
-    if map_side_partition_split > 1:
-        out = out.withColumn("__salt", salt_expr(map_side_partition_split))
-        keys.append("__salt")
-    out = out.repartition(n, *[F.col(k) for k in keys])
-    drop = [] if keep_bucket else [bucket_col]
-    if map_side_partition_split > 1:
-        drop.append("__salt")
-    return out.drop(*drop) if drop else out
-
-
 def z_interleave(a: Column, b: Column, bits: int = 10) -> Column:
     """Morton (Z-order) key: interleave the low ``bits`` bits of two
     non-negative ints — rows close in BOTH dimensions get close z-values, so

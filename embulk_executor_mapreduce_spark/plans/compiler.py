@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from typing import NoReturn
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -202,6 +203,21 @@ _STREAM_SAFE_FILTERS = {
 }
 
 
+def _raise_classified(report: PipelineReport, exc: Exception) -> NoReturn:
+    """Record a failed load's error on ``report`` and re-raise it
+    classified (O13). A merge-commit conflict (retryable multi-writer
+    contention, state consistent) and a ConfigError (the reference's
+    ConfigException: fix the spec, don't retry) surface as they are; any
+    other failure becomes RemoteTaskFailedDataError when it is the input
+    data's fault, else RemoteTaskFailedError."""
+    report.error = f"{type(exc).__name__}: {exc}"
+    if isinstance(exc, (MergeCommitConflictError, ConfigError)):
+        raise exc
+    if _is_user_data_error(exc):
+        raise RemoteTaskFailedDataError(report.error) from exc
+    raise RemoteTaskFailedError(report.error) from exc
+
+
 def _run_cdc_tail(spark: SparkSession, spec: PipelineSpec) -> PipelineReport:
     """Streaming consumption of a merge-sink change feed: a rate-limited
     version-tail loop that applies each committed version's increment
@@ -368,12 +384,7 @@ def _run_cdc_tail(spark: SparkSession, spec: PipelineSpec) -> PipelineReport:
                 start = v
         report.succeeded = True
     except Exception as exc:  # noqa: BLE001 — classify then re-raise
-        report.error = f"{type(exc).__name__}: {exc}"
-        if isinstance(exc, (MergeCommitConflictError, ConfigError)):
-            raise
-        if _is_user_data_error(exc):
-            raise RemoteTaskFailedDataError(report.error) from exc
-        raise RemoteTaskFailedError(report.error) from exc
+        _raise_classified(report, exc)
     finally:
         report.wall_seconds = time.time() - t0
     return report
@@ -596,21 +607,7 @@ def run_pipeline_streaming(spark: SparkSession, spec: PipelineSpec) -> PipelineR
         # PipelineReport.input_rows)
         report.output_rows = report.input_rows
     except Exception as exc:  # noqa: BLE001 — classify then re-raise
-        report.error = f"{type(exc).__name__}: {exc}"
-        if isinstance(exc, MergeCommitConflictError):
-            # already precisely classified: retryable multi-writer
-            # contention, state consistent — don't blur it into the generic
-            # infra bucket (callers back off and re-run the load)
-            raise
-        if isinstance(exc, ConfigError):
-            # config-time user error (reference ConfigException fails fast
-            # before job submission) — a bad filter config is neither a data
-            # error nor an infra failure; surface it as-is so callers can
-            # fix the spec instead of retrying the load
-            raise
-        if _is_user_data_error(exc):
-            raise RemoteTaskFailedDataError(report.error) from exc
-        raise RemoteTaskFailedError(report.error) from exc
+        _raise_classified(report, exc)
     finally:
         report.wall_seconds = time.time() - t0
     return report
@@ -755,21 +752,7 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec) -> PipelineReport:
                 _json.dumps(manifest, indent=1)
             )
     except Exception as exc:  # noqa: BLE001 — classify then re-raise
-        report.error = f"{type(exc).__name__}: {exc}"
-        if isinstance(exc, MergeCommitConflictError):
-            # already precisely classified: retryable multi-writer
-            # contention, state consistent — don't blur it into the generic
-            # infra bucket (callers back off and re-run the load)
-            raise
-        if isinstance(exc, ConfigError):
-            # config-time user error (reference ConfigException fails fast
-            # before job submission) — a bad filter config is neither a data
-            # error nor an infra failure; surface it as-is so callers can
-            # fix the spec instead of retrying the load
-            raise
-        if _is_user_data_error(exc):
-            raise RemoteTaskFailedDataError(report.error) from exc
-        raise RemoteTaskFailedError(report.error) from exc
+        _raise_classified(report, exc)
     finally:
         if errors is not None:
             report.failed_tasks = sorted(errors.value)

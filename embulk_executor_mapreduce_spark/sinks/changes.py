@@ -19,6 +19,11 @@ Spark-first, scale-first design:
   bucket dirs total, not two full snapshots — the file-listing analog of
   partition pruning, and the property that makes a per-increment CDC feed
   viable on a 100 TB state.
+* **Schemas from the manifests.** Each side of a diff is read under its
+  own manifest's schema stamp (``writer._read_state``), so building a
+  parquet/ORC feed's plan runs no Spark job and opens no footer. Only
+  schema-on-read formats (csv/json), which carry no stamp, infer — once
+  per feed, over a full snapshot, pinned for every side.
 * **One join.** The diff itself is a single full-outer join on the merge
   keys (both sides are bucket-subset reads sharing the sink's
   ``pmod(xxhash64(key), merge_buckets)`` layout) followed by an in-plan
@@ -48,11 +53,13 @@ from pyspark.sql import functions as F
 
 from .writer import (
     MERGE_BUCKET_COL,
+    _bucket_dirs,
     _current_version,
     _fsync_write,
     _load_manifest,
     _local,
     _manifest_path,
+    _read_state,
 )
 
 CHANGE_TYPE_COL = "_change_type"
@@ -154,37 +161,27 @@ def _pair_frames(
     schema=None,
 ) -> tuple[DataFrame, DataFrame]:
     """(old, new) bucket-subset frames for one manifest pair: only buckets
-    whose directories differ are listed or read on either side. ``schema``
-    (optional) pins the read schema — required when a per-version feed
-    reads schema-on-read formats, so every adjacent pair infers
-    identically (see :func:`table_changes`)."""
+    whose directories differ are listed or read on either side, each side
+    under its own manifest's schema stamp. ``schema`` (optional) pins the
+    read schema instead — required when a feed reads schema-on-read
+    formats, so every side and pair infers identically (see
+    :func:`_pinned_schema`)."""
     ba, bb = man_a["buckets"], man_b["buckets"]
     changed = sorted(b for b in set(ba) | set(bb) if ba.get(b) != bb.get(b))
     old_dirs = [os.path.join(local, ba[b]) for b in changed if b in ba]
     new_dirs = [os.path.join(local, bb[b]) for b in changed if b in bb]
-
-    def _read(dirs):
-        r = spark.read.format(fmt)
-        return (r.schema(schema) if schema is not None else r).load(dirs)
-
-    old = _read(old_dirs) if old_dirs else None
-    new = _read(new_dirs) if new_dirs else None
+    old = _read_state(spark, man_a, fmt, old_dirs, schema) if old_dirs else None
+    new = _read_state(spark, man_b, fmt, new_dirs, schema) if new_dirs else None
     if old is None and new is None:
-        # zero changed buckets: the feed is empty either way; schema from
-        # ONE committed bucket dir (listing every bucket of a 4096-bucket
-        # state just to infer a schema would defeat the O(changed buckets)
-        # pruning story). An EMPTY committed state (a stream whose first
-        # micro-batch had no rows) has manifests with zero buckets — no
-        # schema exists anywhere to shape the feed, same contract as
-        # read_merge_state.
-        probe = bb or ba
-        if not probe:
-            raise FileNotFoundError(
-                "merge state has no committed buckets to take the feed "
-                "schema from"
-            )
-        one = next(iter(probe.values()))
-        old = new = _read(os.path.join(local, one)).limit(0)
+        # zero changed buckets: the feed is empty either way, shaped by the
+        # schema of whichever side has committed buckets (an EMPTY
+        # committed state has none — no schema exists anywhere to shape
+        # the feed, same contract as read_merge_state)
+        man = man_b if bb else man_a
+        dirs = _bucket_dirs(local, man["buckets"])
+        old = new = spark.createDataFrame(
+            [], _read_state(spark, man, fmt, dirs, schema, schema_only=True)
+        )
     elif old is None:
         # empty side built FROM the non-empty side's frame, not a separate
         # read (ADVICE r7): schema-on-read formats (csv/json via fmt) can
@@ -198,27 +195,29 @@ def _pair_frames(
 
 
 def _pinned_schema(spark, local: str, manifests_newest_first, fmt: str, path: str):
-    """(schema-or-None, full dir list of the newest manifest with buckets).
+    """(schema-or-None, the newest manifest with committed buckets).
 
-    The newest manifest with any committed buckets anchors the feed
-    schema. Self-describing formats (parquet/ORC) need no pinned read
-    schema (one bucket dir suffices as an empty-frame schema probe);
-    schema-on-read formats (csv/json) DO — the diff reads different bucket
-    subsets on each side (and, per-version, per pair), and independent
-    inference could type the same column differently (all-null in one
-    subset, populated or numeric-looking in another), breaking the join or
-    the cross-pair union. For those, infer over the FULL snapshot, never
-    one bucket dir: a json bucket whose rows are all null in a column
-    writes no field for it, so a single-bucket probe would silently DROP
-    the column feed-wide. One inference pass over the snapshot is the
-    documented cost of running a CDC feed over a schema-less format."""
+    That manifest anchors the feed. A stamped manifest pins nothing: each
+    side of each pair reads under its own manifest's stamp, so a diff
+    across a column-introducing commit still fails the schema check.
+    Unstamped ones — schema-on-read formats (csv/json), or a manifest
+    committed before stamping — are pinned to the anchor's schema: the
+    diff reads different bucket subsets on each side (and, per-version,
+    per pair), and independent inference could type the same column
+    differently (all-null in one subset, populated or numeric-looking in
+    another), breaking the join or the cross-pair union. For
+    schema-on-read formats :func:`...writer._read_state` infers over the
+    FULL snapshot, never one bucket dir: a json bucket whose rows are all
+    null in a column writes no field for it, so a single-bucket probe
+    would silently DROP the column feed-wide. One inference pass over the
+    snapshot is the documented cost of running a CDC feed over a
+    schema-less format."""
     for man in manifests_newest_first:
-        b = man["buckets"]
-        if b:
-            dirs = [os.path.join(local, rel) for rel in b.values()]
-            if fmt in ("parquet", "orc"):
-                return None, dirs
-            return spark.read.format(fmt).load(dirs).schema, dirs
+        if man["buckets"]:
+            if "schema" in man:
+                return None, man
+            dirs = _bucket_dirs(local, man["buckets"])
+            return _read_state(spark, man, fmt, dirs, schema_only=True), man
     raise FileNotFoundError(
         f"merge state {path} has no committed buckets in the requested "
         "version range to take the feed schema from"
@@ -727,7 +726,7 @@ def table_changes(
     manifests = {
         v: _load_manifest(local, v) for v in range(from_version, to_v + 1)
     }
-    schema, probe_dirs = _pinned_schema(
+    schema, anchor = _pinned_schema(
         spark,
         local,
         [manifests[v] for v in range(to_v, from_version - 1, -1)],
@@ -750,12 +749,11 @@ def table_changes(
         )
     if not feeds:
         # from_version == to_version: empty feed with the full output
-        # schema (pinned schema for schema-on-read formats; one bucket dir
-        # is enough under self-describing formats)
-        rdr = spark.read.format(fmt)
-        if schema is not None:
-            rdr = rdr.schema(schema)
-        empty = rdr.load(probe_dirs[0]).limit(0).drop(MERGE_BUCKET_COL)
+        # schema of the anchor manifest
+        dirs = _bucket_dirs(local, anchor["buckets"])
+        empty = spark.createDataFrame(
+            [], _read_state(spark, anchor, fmt, dirs, schema, schema_only=True)
+        ).drop(MERGE_BUCKET_COL)
         if COMMIT_VERSION_COL in empty.columns:
             raise ValueError(
                 f"snapshot columns collide with {COMMIT_VERSION_COL}"

@@ -14,6 +14,9 @@ bucket→reducer routing.
 
 from __future__ import annotations
 
+import os
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -60,7 +63,6 @@ def _pointer_version(local: str) -> int | None:
     """Committed version from the ``_CURRENT`` pointer; None = no merge
     state at this path."""
     import json
-    import os
 
     p = os.path.join(local, _CURRENT_FILE)
     if not os.path.exists(p):
@@ -81,8 +83,6 @@ def _current_version(path: str) -> int:
 
 
 def _manifest_path(local: str, version: int) -> str:
-    import os
-
     return os.path.join(local, _MANIFEST_DIR, f"v{version}.json")
 
 
@@ -91,6 +91,11 @@ def _load_manifest(local: str, version: int) -> dict:
 
     with open(_manifest_path(local, version)) as f:
         return json.load(f)
+
+
+def _bucket_dirs(local: str, bmap: dict[str, str]) -> list[str]:
+    """Absolute directories of a manifest bucket map's entries."""
+    return [os.path.join(local, rel) for rel in bmap.values()]
 
 
 #: formats whose files are authoritative about their own schema; the ONLY
@@ -145,26 +150,44 @@ def _stamp_schema(frame_schema, fmt: str) -> dict | None:
     return _relaxed_schema(kept).jsonValue()
 
 
-def _stamped_schema(man: dict, fmt: str):
-    """Resolve a manifest's committed-schema stamp to a ``StructType``, or
-    None (a manifest that predates the stamp, or a schema-on-read format).
-    Zero Spark jobs and zero file listing — this is the point: every
-    commit/probe/read used to pay a driver-side listing + footer (or
-    full-snapshot) inference pass just to learn a schema the writer
-    already knew at commit time."""
+def _read_state(
+    spark, man: dict, fmt: str, dirs: list[str], schema=None, schema_only=False
+):
+    """Read bucket ``dirs`` of the merge-state version whose manifest is
+    ``man`` — the one place a state read's schema is decided. It is
+    ``schema`` when the caller pins one, else the manifest's stamp (no
+    Spark job, no footer read); only a manifest without a stamp (a
+    schema-on-read format, or one committed before stamping) is inferred.
+
+    ``schema_only=True`` returns just that schema, a ``StructType``. When
+    it is known no file is opened; otherwise it is inferred from ONE dir
+    of a self-describing format (all state files share one fused schema —
+    evolution forces a full rewrite) and from ALL ``dirs`` of a
+    schema-on-read one (a json bucket all-null in a column writes no
+    field for it)."""
     from pyspark.sql import types as T
 
-    if fmt not in _SELF_DESCRIBING:
-        return None
-    js = man.get("schema")
-    return T.StructType.fromJson(js) if js is not None else None
+    if schema is None and fmt in _SELF_DESCRIBING and man.get("schema") is not None:
+        schema = T.StructType.fromJson(man["schema"])
+    if schema_only:
+        if schema is not None:
+            return schema
+        if not dirs:
+            raise FileNotFoundError(
+                "merge state has no committed buckets to take the schema from"
+            )
+        if fmt in _SELF_DESCRIBING:
+            dirs = dirs[:1]
+    rdr = spark.read.format(fmt)
+    if schema is not None:
+        rdr = rdr.schema(schema)
+    df = rdr.load(dirs)
+    return df.schema if schema_only else df
 
 
 def _fsync_write(path: str, payload: str) -> None:
     """Write-then-rename with fsync on file AND directory, so the rename is
     the durable commit point (the pointer protocol's one atomic step)."""
-    import os
-
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
         f.write(payload)
@@ -212,8 +235,6 @@ def read_merge_state(
     directories — the inverted-list read for states bucketed on a probe
     key (``SinkSpec.merge_bucket_columns``); derive the ids from literal
     probe values with :func:`merge_bucket_ids`."""
-    import os
-
     local = _local(path)
     current = _current_version(path)
     v = current if version is None else version
@@ -223,37 +244,23 @@ def read_merge_state(
             f"snapshots are GC'd per the sink's merge_keep_versions retention)"
         )
     man = _load_manifest(local, v)
-    # manifest schema stamp (r16): skips the read's plan-time footer
-    # inference pass (and, for the empty-probe path below, the one-dir
-    # load). Pre-stamp manifests and schema-on-read formats keep inference.
-    stamped = _stamped_schema(man, fmt)
-    bmap = man["buckets"]
+    dirs = _bucket_dirs(local, man["buckets"])
+    if not dirs:
+        raise FileNotFoundError(f"merge state at {path} has no committed buckets")
     if buckets is not None:
         # keyed-probe pruning: open ONLY the named buckets' directories
         # (absent ids are legitimately empty — never an error). The caller
         # derives the ids from its probe keys via merge_bucket_ids().
-        pruned = {b: rel for b, rel in bmap.items() if int(b) in set(buckets)}
-        if not pruned and bmap:
+        wanted = set(buckets)
+        pruned = {b: rel for b, rel in man["buckets"].items() if int(b) in wanted}
+        if not pruned:
             # EVERY probed id is absent — e.g. an out-of-vocabulary query
-            # term whose bucket no committed batch ever wrote (r15 advisor
-            # finding: this raised, turning a legitimate zero-result probe
-            # into a failed request). Zero rows, schema from any committed
-            # bucket (all state files share one fused schema — evolution
-            # forces a full rewrite, so any directory is authoritative).
-            one = os.path.join(local, next(iter(bmap.values())))
-            rdr = spark.read.format(fmt)
-            if stamped is not None:
-                rdr = rdr.schema(stamped)
-            empty = rdr.load(one).limit(0)
-            return _drop_tombstones(empty, delete_col)
-        bmap = pruned
-    dirs = [os.path.join(local, rel) for rel in bmap.values()]
-    if not dirs:
-        raise FileNotFoundError(f"merge state at {path} has no committed buckets")
-    rdr = spark.read.format(fmt)
-    if stamped is not None:
-        rdr = rdr.schema(stamped)
-    return _drop_tombstones(rdr.load(dirs), delete_col)
+            # term whose bucket no committed batch ever wrote: zero rows
+            # with the state's schema, not an error
+            schema = _read_state(spark, man, fmt, dirs, schema_only=True)
+            return _drop_tombstones(spark.createDataFrame([], schema), delete_col)
+        dirs = _bucket_dirs(local, pruned)
+    return _drop_tombstones(_read_state(spark, man, fmt, dirs), delete_col)
 
 
 def merge_state_layout(path: str) -> dict | None:
@@ -273,23 +280,14 @@ def merge_state_layout(path: str) -> dict | None:
 
 def merge_state_schema(spark, path: str, fmt: str = "parquet"):
     """Schema of a committed merge state without loading any rows: resolve
-    pointer → manifest ``schema`` stamp (r16 — zero Spark jobs), falling
-    back for pre-stamp manifests to ONE bucket directory's parquet footers
-    (all state files share a fused schema — evolution forces a full
-    rewrite, so any directory is authoritative). Raises when there is no
-    state or it has no committed buckets."""
-    import os
-
+    pointer → manifest ``schema`` stamp (zero Spark jobs), inferring only
+    where there is no stamp (see :func:`_read_state`). Raises when there is
+    no state, or no stamp and no committed buckets."""
     local = _local(path)
     man = _load_manifest(local, _current_version(path))
-    stamped = _stamped_schema(man, fmt)
-    if stamped is not None:
-        return stamped
-    bmap = man["buckets"]
-    if not bmap:
-        raise FileNotFoundError(f"merge state at {path} has no committed buckets")
-    one = os.path.join(local, next(iter(bmap.values())))
-    return spark.read.format(fmt).load(one).schema
+    return _read_state(
+        spark, man, fmt, _bucket_dirs(local, man["buckets"]), schema_only=True
+    )
 
 
 def merge_bucket_ids(
@@ -310,16 +308,15 @@ def merge_bucket_ids(
     ``xxhash64`` is TYPE-sensitive: a Python int probe infers LongType and
     hashes DIFFERENTLY against an int-typed bucket column, and the pruned
     read then treats the wrong ids as legitimately-empty buckets —
-    silently missing rows (r15 advisor finding; the docstring used to
-    merely warn). Pass ``state_path`` to make the types load-bearing: the
-    bucket columns and ``n_buckets`` come from the state's COMMITTED
-    layout and the probe literals are CAST to the committed schema's
-    column types before hashing. A caller that has already loaded the
-    layout (every prober starts by checking the bucket columns) passes
-    it via ``layout=`` to skip the repeat manifest parse — one schema
-    footer read per probe remains, it is what carries the types. The
-    bare ``n_buckets`` form remains for states without a recorded
-    layout — callers own the type contract there."""
+    silently missing rows. Pass ``state_path`` to make the types
+    load-bearing: the bucket columns and ``n_buckets`` come from the
+    state's COMMITTED layout and the probe literals are CAST to the
+    committed schema's column types before hashing. A caller that has
+    already loaded the layout (every prober starts by checking the bucket
+    columns) passes it via ``layout=`` to skip the repeat manifest parse;
+    the types come from the manifest's schema stamp. The bare
+    ``n_buckets`` form remains for states without a recorded layout —
+    callers own the type contract there."""
     rows = [v if isinstance(v, tuple) else (v,) for v in values]
     if not rows:
         return []
@@ -351,13 +348,12 @@ def merge_bucket_ids(
         # blows up as a raw NumberFormatException mid-collect, and with
         # ANSI off it casts to NULL, hashes anyway, and yields a
         # silently-empty pruned read — the exact silent-miss failure mode
-        # the typed cast exists to eliminate, one layer down (r16 advisor
-        # finding). try_cast makes BOTH the check and the hash
-        # ANSI-agnostic, so the cast-validity marks and the bucket ids ride
-        # in ONE collect (r16 optimization: this runs on every pruned-read
-        # probe, and the separate check job doubled the serving hot path's
-        # driver round-trips — ~0.4 s per probe at bench scale); rows
-        # bounded by the probe list. A row with any offending mark raises
+        # the typed cast exists to eliminate, one layer down. try_cast
+        # makes BOTH the check and the hash ANSI-agnostic, so the
+        # cast-validity marks and the bucket ids ride in ONE collect (this
+        # runs on every pruned-read probe; a separate check job would
+        # double the serving hot path's driver round-trips); rows bounded
+        # by the probe list. A row with any offending mark raises
         # before its (try_cast-NULLed) id can be used.
         marks = [
             F.when(
@@ -444,7 +440,6 @@ def _gc_merge_state(
     purely by manifest reachability (their manifest, if any, was durably
     written before the pointer ever reached them), and concurrent GCs
     tolerate each other (remove races are ignored)."""
-    import os
     import re
     import shutil
     import time
@@ -532,7 +527,6 @@ def _commit_merge_version(
     layout needs no change."""
     import fcntl
     import json
-    import os
     import shutil
 
     with open(os.path.join(local, _COMMIT_LOCK_FILE), "a") as lf:
@@ -558,8 +552,8 @@ def _commit_merge_version(
             if schema is not None:
                 # the committed files' (fused, read-back-relaxed) schema —
                 # later commits, probes and reads resolve it from here
-                # instead of paying a driver-side listing + footer
-                # inference job per call (r16; see _stamp_schema)
+                # without a listing + footer inference job (see
+                # _read_state)
                 man["schema"] = schema
             _fsync_write(
                 _manifest_path(local, new_version),
@@ -596,16 +590,21 @@ def _merge_file_sink(df: DataFrame, spec: SinkSpec) -> None:
     tie-breakers, so they must be orderable types (no map columns in merge
     mode).
 
-    Commit protocol — POINTER, not directory swap (VERDICT r3 item 4; the
-    same manifest/_CURRENT indirection table formats use for atomic
-    visibility on a dumb filesystem):
+    Commit protocol — POINTER, not directory swap (the same
+    manifest/_CURRENT indirection table formats use for atomic visibility
+    on a dumb filesystem). Steps (1)-(3) above are this sink's plan step
+    (:func:`_merge_plan`); everything after it is the staged-tree CAS loop
+    :func:`_commit_loop`, shared with :func:`purge_tombstones` and
+    :func:`compact_merge_state`:
 
-    1. write the merged touched buckets under ``_trees/v<N+1>/`` — invisible
-       to every reader (nothing references the tree yet, and Spark's file
-       listing skips underscore-prefixed directories);
-    2. write ``_manifests/v<N+1>.json`` mapping EVERY bucket id to its
-       directory — touched buckets point into the new tree, untouched keep
-       their existing (possibly much older) dirs;
+    1. write the merged touched buckets under an attempt-unique
+       ``_trees/.inprogress-*`` tree — invisible to every reader (nothing
+       references it, and Spark's file listing skips underscore-prefixed
+       directories);
+    2. under the commit lock, rename it to ``_trees/v<N+1>/`` and write
+       ``_manifests/v<N+1>.json`` mapping EVERY bucket id to its directory
+       — touched buckets point into the new tree, untouched keep their
+       existing (possibly much older) dirs;
     3. fsync + atomically rename ``_CURRENT`` to version N+1 — THE commit
        point: a reader resolves the pointer before or after, never between;
     4. GC everything unreachable from manifests N+1 and N — keeping N gives
@@ -614,16 +613,14 @@ def _merge_file_sink(df: DataFrame, spec: SinkSpec) -> None:
        stale must re-resolve).
 
     A crash anywhere before (3) leaves orphans no reader can reach; the
-    next merge's entry GC removes them. ``read_merge_state`` is the read
-    path (``__mb`` rides INSIDE the files as a data column, so one
-    multi-path scan restores it without partition inference).
+    next commit's GC removes them. ``read_merge_state`` is the read path
+    (``__mb`` rides INSIDE the files as a data column, so one multi-path
+    scan restores it without partition inference).
 
-    MULTI-WRITER (r5, closing SCALING §10 caveat (c)): commits go through
-    an optimistic CAS — each writer stages its merged tree under an
-    attempt-unique ``.inprogress-*`` name, then under the advisory commit
-    lock re-checks the pointer it merged against; if another writer
-    advanced it, the attempt is discarded and the merge recomputed against
-    the new snapshot (bounded retries, then
+    MULTI-WRITER: step (2) is an optimistic CAS — under the advisory commit
+    lock the loop re-checks the pointer it planned against; if another
+    writer advanced it, the attempt is discarded and the merge recomputed
+    against the new snapshot (bounded retries, then
     :class:`...errors.MergeCommitConflictError`). History stays LINEAR:
     every committed version v(N+1) was computed from exactly v(N). A
     table-format sink (Delta/Iceberg MERGE) IS this protocol
@@ -635,9 +632,7 @@ def _merge_file_sink(df: DataFrame, spec: SinkSpec) -> None:
     INTRODUCES new columns forces one full rewrite so all state files share
     a fused schema and readers need no ``mergeSchema``.
 
-    KEYED DELETE (r14, VERDICT r13 item 2 — right-to-be-forgotten through
-    the standing state without a snapshot rewrite):
-    ``SinkSpec.delete_column`` names a BOOLEAN marker column;
+    KEYED DELETE: ``SinkSpec.delete_column`` names a BOOLEAN marker column;
     a batch row with the marker true is a TOMBSTONE retiring its key.
     Tombstones ride through the SAME keyed argmax as upserts — the
     merge_order decides, so a tombstone at order 5 beats an upsert at
@@ -657,15 +652,11 @@ def _merge_file_sink(df: DataFrame, spec: SinkSpec) -> None:
     ``PipelineSpec.validate`` so the YAML front door fails at plan time —
     and only the data-dependent boolean-dtype check stays here.
     """
-    import os
-
     from ..spec import validate_merge_sink_keying
 
     spark = df.sparkSession
     path = spec.path
     local = _local(path)
-    keys = list(spec.merge_key)
-    order = list(spec.merge_order)
     validate_merge_sink_keying(spec)
     bucket_cols = list(spec.resolved_merge_bucket_columns())
     delete_col = spec.delete_column
@@ -700,16 +691,14 @@ def _merge_file_sink(df: DataFrame, spec: SinkSpec) -> None:
     mb = F.pmod(
         F.xxhash64(*[F.col(c) for c in bucket_cols]), F.lit(spec.merge_buckets)
     ).cast("int")
-    # ONE evaluation of the incoming batch per commit (r16 optimization,
-    # guide §1.2/§2.3): the merge needs the batch twice — once to learn
-    # which buckets it touches (the pruning probe) and once in the merge
-    # aggregate — and for computed deltas (tokenized postings, decoded
-    # image hashes, ANN assignments) re-running the producing plan doubles
-    # the increment's dominant cost. Persisting the __gen-tagged frame
-    # bounds the second pass at a cache read; worst case (a raw scan batch
-    # spilled to disk) costs what the old double-scan already paid. The
-    # frame is unpersisted on every exit path; CAS retries reuse it (the
-    # batch does not change between attempts).
+    # ONE evaluation of the incoming batch per commit: the merge needs the
+    # batch twice — once to learn which buckets it touches (the pruning
+    # probe) and once in the merge aggregate — and for computed deltas
+    # (tokenized postings, decoded image hashes, ANN assignments)
+    # re-running the producing plan doubles the increment's dominant cost.
+    # Persisting the __gen-tagged frame bounds the second pass at a cache
+    # read. The frame is unpersisted on every exit path; CAS retries reuse
+    # it (the batch does not change between attempts).
     from ..session import aqe_cached_plan_scope
 
     # AQE inside the cached batch plan, scoped to this commit; the scope
@@ -720,253 +709,240 @@ def _merge_file_sink(df: DataFrame, spec: SinkSpec) -> None:
     with aqe_cached_plan_scope(spark):
         new = df.withColumn("__gen", F.lit(1)).persist()
         try:
-            _merge_file_sink_attempts(new, df, spec, mb, local, path, keys, order)
+            _commit_loop(
+                spark,
+                spec,
+                lambda man: _merge_plan(spec, new, mb, man),
+                "merge sink",
+            )
         finally:
             new.unpersist()
 
 
-def _merge_file_sink_attempts(
-    new: DataFrame,
-    df: DataFrame,
-    spec: SinkSpec,
-    mb,
-    local: str,
-    path: str,
-    keys: list[str],
-    order: list[str],
-) -> None:
-    import os
+class _Rewrite(NamedTuple):
+    """One attempt's plan for :func:`_commit_loop`."""
+
+    #: the rows to write, each carrying its MERGE_BUCKET_COL
+    rows: DataFrame
+    #: bucket ids the rows replace; None = every bucket (a full rewrite)
+    touched: list[int] | None
+    #: bucket-hash layout stamped into the new manifest
+    layout: dict | None
+    #: what the loop returns once the commit lands
+    result: int = 0
+
+
+def _merge_plan(
+    spec: SinkSpec, new: DataFrame, mb, man: dict | None
+) -> _Rewrite | None:
+    """The merge sink's plan step: the keyed argmax of the batch ``new``
+    (``__gen``-tagged, bucket expression ``mb``) over the snapshot ``man``
+    names (None before a first commit). None for an empty batch against
+    a non-empty state (nothing to commit)."""
+    spark = new.sparkSession
+    local = _local(spec.path)
+    keys = list(spec.merge_key)
+    order = list(spec.merge_order)
+    layout = {
+        "bucket_columns": list(spec.resolved_merge_bucket_columns()),
+        "n_buckets": spec.merge_buckets,
+    }
+    touched: list[int] | None = None
+    old = None
+    if man is not None:
+        # bucket-layout drift guard: the pruned path loads only the buckets
+        # the SPEC's hash names — under a silently different layout a key's
+        # existing row lives in a bucket the merge never loads, and the
+        # state ends up with duplicate keys. A recorded layout that differs
+        # from the spec is an error unless the caller opts into an explicit
+        # full-rewrite migration. Manifests without a layout stamp can't be
+        # validated — the layout is stamped from this commit on.
+        committed_layout = man.get("layout")
+        relayout = committed_layout is not None and committed_layout != layout
+        if relayout and not spec.options.get("allow_relayout"):
+            raise ConfigError(
+                f"merge sink {spec.path}: committed bucket layout "
+                f"{committed_layout} != spec layout {layout}; changing "
+                "merge_buckets or merge_bucket_columns on an existing "
+                "state requires options.allow_relayout: true (one full "
+                "re-bucketing rewrite)"
+            )
+        bucket_dirs = man["buckets"]
+        all_dirs = _bucket_dirs(local, bucket_dirs)
+        # a zero-bucket state (first commit was an empty batch) has no
+        # files: stay schema-less so the batch takes the plain
+        # first-write path
+        if all_dirs:
+            old_schema = _read_state(
+                spark, man, spec.type, all_dirs, schema_only=True
+            )
+            # a batch that INTRODUCES columns forces a one-time full
+            # rewrite so every state file keeps one fused schema (readers
+            # need no mergeSchema); steady-state batches — the hot path —
+            # prune. An allowed RELAYOUT forces the same full rewrite
+            # (every row re-hashes under the new layout).
+            evolves = relayout or bool(
+                set(new.columns) - {"__gen"} - set(old_schema.fieldNames())
+            )
+            if evolves:
+                old = _read_state(spark, man, spec.type, all_dirs, old_schema)
+            else:
+                # ≤ merge_buckets rows — bounded by CONFIG, never by data
+                # size. Probed over the PERSISTED frame so the batch plan
+                # runs once per commit, not once here and again in the
+                # merge write.
+                touched = sorted(
+                    r.b for r in new.select(mb.alias("b")).distinct().collect()
+                )
+                if not touched:
+                    # empty batch: state unchanged, no new version. The
+                    # probe already executed the (empty) batch plan, so
+                    # caller-attached observers (the pipeline report's row
+                    # count) have fired.
+                    return None
+                tdirs = [
+                    os.path.join(local, bucket_dirs[str(b)])
+                    for b in touched
+                    if str(b) in bucket_dirs
+                ]
+                if tdirs:
+                    old = _read_state(spark, man, spec.type, tdirs, old_schema)
+    if old is not None:
+        old = old.drop(MERGE_BUCKET_COL).withColumn("__gen", F.lit(0))
+        both = old.unionByName(new, allowMissingColumns=True)
+    else:
+        both = new
+    payload = [c for c in both.columns if c not in keys and c != "__gen"]
+    for c in order:
+        if c not in payload:
+            raise ConfigError(f"merge_order column {c!r} missing from the data")
+    ride = [c for c in payload if c not in order]
+    merged = (
+        both.groupBy(*keys)
+        .agg(F.max(F.struct(*order, F.col("__gen"), *ride)).alias("m"))
+        .select(*keys, *[F.col(f"m.{c}").alias(c) for c in payload])
+        .withColumn(MERGE_BUCKET_COL, mb)
+    )
+    return _Rewrite(merged, touched, layout)
+
+
+def _commit_loop(spark, spec: SinkSpec, plan, what: str) -> int:
+    """The staged-tree CAS loop every merge-state commit goes through: the
+    merge sink, :func:`purge_tombstones` and :func:`compact_merge_state`
+    differ only in ``plan(manifest)``, which returns the
+    :class:`_Rewrite` to commit against that snapshot (the manifest is
+    None before a first commit), or None for "nothing to commit" (the
+    loop then returns 0). Each attempt:
+
+    1. plans against the snapshot the pointer names;
+    2. writes the plan's rows CLUSTERED BY BUCKET DIR under an
+       attempt-unique ``.inprogress-*`` tree (concurrent writers never
+       share a Spark output directory);
+    3. builds the next bucket map from the dirs written: untouched buckets
+       keep their dirs, written ones are replaced, and a touched bucket
+       that came out empty drops out;
+    4. CAS-commits through :func:`_commit_merge_version`, then GCs.
+
+    A lost CAS means another writer's commit landed mid-attempt — the
+    staged tree lacks that writer's rows in the shared buckets — so it is
+    discarded and the plan recomputed against the new snapshot; so is an
+    attempt whose snapshot was superseded AND aged out of retention
+    mid-compute (a competitor ≥ merge_keep_versions commits ahead).
+    Conflict cost is one recompute per conflict; the winner is never
+    blocked. After ``_MERGE_COMMIT_RETRIES`` losses in a row:
+    :class:`...errors.MergeCommitConflictError`."""
     import shutil
     import uuid
 
     from ..errors import MergeCommitConflictError
 
-    # Optimistic concurrency (multi-writer): compute the merge against the
-    # snapshot the pointer names, stage the result under an attempt-unique
-    # tree, then CAS-commit. A failed CAS means another writer's commit
-    # landed mid-merge — the staged tree is STALE (it lacks that writer's
-    # rows in the shared buckets), so it is discarded and the merge recomputed
-    # against the new snapshot. Conflict cost is one recompute per conflict;
-    # the winning writer is never blocked.
-    spark = df.sparkSession
-    bucket_cols = list(spec.resolved_merge_bucket_columns())
+    local = _local(spec.path)
     for _attempt in range(_MERGE_COMMIT_RETRIES):
         version = _pointer_version(local)
-        # attempt-unique staging: concurrent writers must never share a
-        # Spark output directory; the CAS winner renames into place
         attempt_dir = os.path.join(
             local, _TREE_DIR, f"{_INPROGRESS_PREFIX}{uuid.uuid4().hex[:12]}"
         )
+        # the WHOLE read-plan-write sequence sits inside the stale-snapshot
+        # retry: the manifest read and the plan's own collects and counts
+        # read the snapshot too
         try:
-            touched: list[int] | None = None
-            old = None
-            bucket_dirs: dict[str, str] = {}
-            layout = {
-                "bucket_columns": bucket_cols,
-                "n_buckets": spec.merge_buckets,
-            }
-            relayout = False
-            if version is not None:
-                # finish any crashed attempt's cleanup
-                _gc_merge_state(local, spec.merge_keep_versions)
-                man = _load_manifest(local, version)
-                bucket_dirs = man["buckets"]
-                # bucket-layout drift guard (r14 review finding): the
-                # pruned path loads only the buckets the SPEC's hash names
-                # — under a silently different layout a key's existing row
-                # lives in a bucket the merge never loads, and the state
-                # ends up with duplicate keys. A recorded layout that
-                # differs from the spec is an error unless the caller
-                # opts into an explicit full-rewrite migration. Manifests
-                # without a layout stamp can't be validated — the layout
-                # is stamped from this commit on.
-                committed_layout = man.get("layout")
-                relayout = (
-                    committed_layout is not None and committed_layout != layout
-                )
-                if relayout and not spec.options.get("allow_relayout"):
-                    raise ConfigError(
-                        f"merge sink {path}: committed bucket layout "
-                        f"{committed_layout} != spec layout {layout}; changing "
-                        "merge_buckets or merge_bucket_columns on an existing "
-                        "state requires options.allow_relayout: true (one full "
-                        "re-bucketing rewrite)"
-                    )
-                all_dirs = [os.path.join(local, rel) for rel in bucket_dirs.values()]
-                # Committed schema from the manifest stamp when present
-                # (r16 — zero jobs), else from ONE bucket dir, not a full
-                # multi-dir load (r16 optimization, guide §1.2/§6) —
-                # SELF-DESCRIBING formats only: parquet/ORC state files
-                # share one fused schema (evolution forces a full rewrite),
-                # so the stamp/a single footer is authoritative — the old
-                # code built an eager load over EVERY bucket dir (plan-time
-                # listing + inference, ~0.4 s on a 64-bucket state) just to
-                # read .columns, then discarded it for the pruned read below.
-                # Schema-on-read formats (csv/json) MUST keep the full-
-                # snapshot inference: a json bucket all-null in a column
-                # writes no field for it, and a one-dir probe would drop or
-                # mistype the column state-wide (pinned in
-                # tests/test_changes.py::test_table_changes_per_version_schema_on_read_pinned).
-                # An EMPTY committed state (a stream whose first micro-batch
-                # had no rows) has a manifest with zero buckets — no state.
-                self_describing = spec.type in _SELF_DESCRIBING
-                # a zero-bucket state (first commit was an empty batch) has
-                # no files: stay schema-less like the pre-stamp code so the
-                # next non-empty batch takes the plain first-write path
-                old_schema = _stamped_schema(man, spec.type) if all_dirs else None
-                if old_schema is None and all_dirs:
-                    probe_dirs = all_dirs[:1] if self_describing else all_dirs
-                    old_schema = (
-                        spark.read.format(spec.type).load(probe_dirs).schema
-                    )
-                # a batch that INTRODUCES columns forces a one-time full rewrite so
-                # every state file keeps one fused schema (readers need no
-                # mergeSchema); steady-state batches — the 100 TB hot path — prune.
-                # An allowed RELAYOUT forces the same full rewrite (every row
-                # re-hashes under the new layout).
-                evolves = (
-                    old_schema is not None
-                    and bool(set(df.columns) - set(old_schema.fieldNames()))
-                ) or relayout
-                if old_schema is not None and evolves:
-                    old = spark.read.format(spec.type).schema(old_schema).load(
-                        all_dirs
-                    )
-                elif old_schema is not None:
-                    # ≤ merge_buckets rows — bounded by CONFIG, never by data
-                    # size. Probed over the PERSISTED frame so the batch plan
-                    # runs once per commit, not once here and again in the
-                    # merge write below.
-                    touched = sorted(
-                        r.b for r in new.select(mb.alias("b")).distinct().collect()
-                    )
-                    if not touched:
-                        # empty batch: state unchanged, no new version. The
-                        # bucket probe above already executed the (empty)
-                        # batch plan, so caller-attached observers (the
-                        # pipeline report's row count) have fired — df's
-                        # CollectMetrics node is inside `new`'s plan.
-                        return
-                    tdirs = [
-                        os.path.join(local, bucket_dirs[str(b)])
-                        for b in touched
-                        if str(b) in bucket_dirs
-                    ]
-                    # the probed schema rides along so the pruned read skips
-                    # a second plan-time inference pass (full-snapshot
-                    # schema either way: one fused footer, or the pinned
-                    # schema-on-read inference above)
-                    old = (
-                        spark.read.format(spec.type)
-                        .schema(old_schema)
-                        .load(tdirs)
-                        if tdirs
-                        else None
-                    )
-            if old is not None:
-                old = old.drop(MERGE_BUCKET_COL).withColumn("__gen", F.lit(0))
-                both = old.unionByName(new, allowMissingColumns=True)
-            else:
-                both = new
-            payload = [c for c in both.columns if c not in keys and c != "__gen"]
-            for c in order:
-                if c not in payload:
-                    raise ConfigError(f"merge_order column {c!r} missing from the data")
-            ride = [c for c in payload if c not in order]
-            merged = (
-                both.groupBy(*keys)
-                .agg(
-                    F.max(
-                        F.struct(*order, F.col("__gen"), *ride)
-                    ).alias("m")
-                )
-                .select(*keys, *[F.col(f"m.{c}").alias(c) for c in payload])
-                .withColumn(MERGE_BUCKET_COL, mb)
-                .withColumn(MERGE_BUCKET_DIR_COL, F.col(MERGE_BUCKET_COL))
+            man = _load_manifest(local, version) if version is not None else None
+            step = plan(man)
+            if step is None:
+                return 0
+            rows = step.rows.withColumn(
+                MERGE_BUCKET_DIR_COL, F.col(MERGE_BUCKET_COL)
             )
-            # Cluster the write BY BUCKET DIR (r16 optimization, guide §6 —
-            # the Iceberg write.distribution-mode=hash tradeoff): without
-            # this, AQE coalesces the merge aggregate to few tasks and ONE
-            # task writes every touched bucket's dynamic partition
-            # sequentially (measured ~1.1 s vs ~0.37 s for 64 dirs at
-            # sf0.1), and at scale many tasks each holding many buckets
-            # write tasks x buckets small files. Hashing on the dir column
-            # gives each bucket exactly one writer task — parallel dir
-            # writes, exactly one file per bucket per commit (the probe
-            # side's ideal open count). Explicit partition count so AQE
-            # cannot coalesce the parallelism away; scale-adaptive: one
-            # task per touched bucket, capped by the cluster's parallelism.
-            n_dirs = len(touched) if touched is not None else spec.merge_buckets
-            n_write = max(
-                1, min(n_dirs, spark.sparkContext.defaultParallelism)
+            # Cluster the write BY BUCKET DIR: without this, AQE coalesces
+            # the plan to few tasks and ONE task writes every touched
+            # bucket's dynamic partition sequentially, and at scale many
+            # tasks each holding many buckets write tasks x buckets small
+            # files. Hashing on the dir column gives each bucket exactly
+            # one writer task — parallel dir writes, one file per bucket
+            # per commit. Explicit partition count so AQE cannot coalesce
+            # the parallelism away: one task per bucket written, capped by
+            # the cluster's parallelism.
+            n_dirs = (
+                len(step.touched) if step.touched is not None
+                else spec.merge_buckets
             )
-            merged = merged.repartition(
-                n_write, F.col(MERGE_BUCKET_DIR_COL)
+            rows = rows.repartition(
+                max(1, min(n_dirs, spark.sparkContext.defaultParallelism)),
+                F.col(MERGE_BUCKET_DIR_COL),
             )
             if spec.sort_by:
-                # per-file clustering INSIDE each bucket dir (r16, VERDICT
-                # r15 item 1): sorting within write partitions — bucket dir
+                # per-file clustering INSIDE each bucket dir — bucket dir
                 # FIRST so the dynamic-partition writer's required ordering
                 # is already satisfied and Spark inserts no re-sort that
                 # would discard the secondary keys — makes each file's
                 # row-group min/max stats tight on the sort columns, so a
                 # probe predicate that is NOT a bucket column (the ANN
-                # codes index's `cid IN (...)`) skips row groups instead of
-                # reading the whole state.
-                merged = merged.sortWithinPartitions(
+                # codes index's `cid IN (...)`) skips row groups
+                rows = rows.sortWithinPartitions(
                     MERGE_BUCKET_DIR_COL, *spec.sort_by
                 )
-            new_version = (version if version is not None else -1) + 1
-            tree_rel = f"{_TREE_DIR}/v{new_version}"
-            # the committed (fused) schema, known right here on the write
-            # side — stamped into the manifest so later commits, probes and
-            # reads resolve it without a listing + footer job (r16)
-            commit_schema = _stamp_schema(merged.schema, spec.type)
-            merged.write.mode("overwrite").format(spec.type).partitionBy(
+            rows.write.mode("overwrite").format(spec.type).partitionBy(
                 MERGE_BUCKET_DIR_COL
             ).save(attempt_dir)
         except Exception as exc:  # noqa: BLE001 — stale-snapshot retry only
             if _is_stale_snapshot_error(exc) and _pointer_version(local) != version:
-                # the snapshot this merge planned against was superseded and
-                # aged out of retention MID-COMPUTE (a competitor committed
-                # >= merge_keep_versions times while this writer worked) —
-                # same remedy as a lost CAS: discard and recompute against
-                # the newest snapshot
                 shutil.rmtree(attempt_dir, ignore_errors=True)
                 continue
             raise
-        written = {
-            name.split("=", 1)[1]: f"{tree_rel}/{name}"
+        new_version = (version if version is not None else -1) + 1
+        tree_rel = f"{_TREE_DIR}/v{new_version}"
+        buckets: dict[str, str] = {}
+        if step.touched is not None:
+            touched = {str(b) for b in step.touched}
+            buckets = {
+                b: rel for b, rel in man["buckets"].items() if b not in touched
+            }
+        buckets.update(
+            (name.split("=", 1)[1], f"{tree_rel}/{name}")
             for name in os.listdir(attempt_dir)
             if name.startswith(f"{MERGE_BUCKET_DIR_COL}=")
-        }
-        buckets: dict[str, str] = {}
-        if touched is not None:
-            touched_set = {str(b) for b in touched}
-            buckets = {
-                b: rel for b, rel in bucket_dirs.items() if b not in touched_set
-            }
-        buckets.update(written)
+        )
         if _commit_merge_version(
-            local, version, new_version, attempt_dir, buckets, layout,
-            commit_schema,
+            local, version, new_version, attempt_dir, buckets, step.layout,
+            # the committed (fused) schema, known right here on the write
+            # side — later commits, probes and reads resolve it from the
+            # manifest without a listing + footer job
+            _stamp_schema(rows.schema, spec.type),
         ):
             _gc_merge_state(local, spec.merge_keep_versions)
-            return
-        # lost the CAS: discard the stale attempt and re-merge against the
-        # snapshot the winning writer just committed
+            return step.result
         shutil.rmtree(attempt_dir, ignore_errors=True)
     raise MergeCommitConflictError(
-        f"merge sink {path}: lost the commit CAS {_MERGE_COMMIT_RETRIES} times "
-        "in a row — state is consistent (competing writers' commits landed); "
-        "re-run to merge this batch against the newest snapshot"
+        f"{what} {spec.path}: lost the commit CAS {_MERGE_COMMIT_RETRIES} "
+        "times in a row — state is consistent (competing writers' commits "
+        "landed); re-run to commit against the newest snapshot"
     )
 
 
 def _rewrite_without(spark, spec: SinkSpec, split, op_name: str) -> int:
-    """Shared maintenance-rewrite loop (r14): drop a subset of rows from a
+    """Shared maintenance plan step: drop a subset of rows from a
     merge-sink state by rewriting ONLY the buckets that hold them,
-    committed through the same staged-tree + CAS pointer flip as a merge.
+    committed through :func:`_commit_loop` like a merge.
     ``split(frame)`` returns ``(victims, survivors)`` — two complementary
     row subsets of any state frame (a filter and its negation, or a
     semi-join and its anti-join; complementary halves beat a generic
@@ -976,126 +952,38 @@ def _rewrite_without(spark, spec: SinkSpec, split, op_name: str) -> int:
     Scale shape: the touched-bucket discovery collects ≤ ``merge_buckets``
     ids (bounded by CONFIG), the rewrite reads only touched directories,
     untouched buckets keep their existing files, and a bucket left EMPTY
-    drops out of the new manifest. Returns the victim row count (0 = no
-    commit made)."""
-    import os
-    import shutil
-    import uuid
-
-    from ..errors import MergeCommitConflictError
-
+    drops out of the new manifest. The committed layout rides into the new
+    manifest unchanged (maintenance never re-buckets). Returns the victim
+    row count (0 = no commit made)."""
     local = _local(spec.path)
-    for _attempt in range(_MERGE_COMMIT_RETRIES):
-        version = _current_version(spec.path)
-        man = _load_manifest(local, version)
+    _current_version(spec.path)  # maintenance needs an existing state
+
+    def plan(man: dict) -> _Rewrite | None:
         bucket_dirs = man["buckets"]
-        all_dirs = [os.path.join(local, rel) for rel in bucket_dirs.values()]
+        all_dirs = _bucket_dirs(local, bucket_dirs)
         if not all_dirs:
-            return 0
-        attempt_dir = os.path.join(
-            local, _TREE_DIR, f"{_INPROGRESS_PREFIX}{uuid.uuid4().hex[:12]}"
+            return None
+        halves = split(_read_state(spark, man, spec.type, all_dirs))
+        if halves is None:
+            return None
+        # ≤ merge_buckets rows — bounded by CONFIG, never by data size
+        touched = sorted(
+            r.b
+            for r in halves[0].select(F.col(MERGE_BUCKET_COL).alias("b"))
+            .distinct()
+            .collect()
         )
-        new_version = version + 1
-        tree_rel = f"{_TREE_DIR}/v{new_version}"
-        # the WHOLE read-plan-write sequence sits inside the stale-snapshot
-        # retry (r14 review finding: covering only the staged write left
-        # the victim-discovery collect and count to crash on a snapshot a
-        # fast concurrent writer aged out of retention mid-job — the same
-        # situation _merge_file_sink retries)
-        try:
-            # manifest schema stamp (r16): both maintenance reads below
-            # skip plan-time footer inference; pre-stamp manifests and
-            # schema-on-read formats keep the inference pass
-            stamped = _stamped_schema(man, spec.type)
-            rdr = spark.read.format(spec.type)
-            if stamped is not None:
-                rdr = rdr.schema(stamped)
-            state = rdr.load(all_dirs)
-            halves = split(state)
-            if halves is None:
-                return 0
-            victims = halves[0]
-            # ≤ merge_buckets rows — bounded by CONFIG, never by data size
-            touched = sorted(
-                r.b
-                for r in victims.select(F.col(MERGE_BUCKET_COL).alias("b"))
-                .distinct()
-                .collect()
-            )
-            if not touched:
-                return 0
-            tdirs = [
-                os.path.join(local, bucket_dirs[str(b)])
-                for b in touched
-                if str(b) in bucket_dirs
-            ]
-            sub = rdr.load(tdirs)
-            sub_victims, sub_survivors = split(sub)
-            removed = sub_victims.count()
-            out = sub_survivors.withColumn(
-                MERGE_BUCKET_DIR_COL, F.col(MERGE_BUCKET_COL)
-            )
-            # one writer task per rewritten bucket (the merge path's r16
-            # clustered-write discipline — parallel dir writes, one file
-            # per bucket, AQE-proof explicit count)
-            out = out.repartition(
-                max(
-                    1,
-                    min(
-                        len(touched), spark.sparkContext.defaultParallelism
-                    ),
-                ),
-                F.col(MERGE_BUCKET_DIR_COL),
-            )
-            if spec.sort_by:
-                # maintenance preserves the merge path's per-file sort
-                # clustering — a compacted index would otherwise lose its
-                # row-group skipping until the next full merge (r16)
-                out = out.sortWithinPartitions(
-                    MERGE_BUCKET_DIR_COL, *spec.sort_by
-                )
-            (
-                out.write.mode("overwrite")
-                .format(spec.type)
-                .partitionBy(MERGE_BUCKET_DIR_COL)
-                .save(attempt_dir)
-            )
-        except Exception as exc:  # noqa: BLE001 — stale-snapshot retry only
-            if _is_stale_snapshot_error(exc) and _pointer_version(local) != version:
-                shutil.rmtree(attempt_dir, ignore_errors=True)
-                continue
-            raise
-        written = {
-            name.split("=", 1)[1]: f"{tree_rel}/{name}"
-            for name in os.listdir(attempt_dir)
-            if name.startswith(f"{MERGE_BUCKET_DIR_COL}=")
-        }
-        touched_set = {str(b) for b in touched}
-        buckets = {
-            b: rel for b, rel in bucket_dirs.items() if b not in touched_set
-        }
-        buckets.update(written)  # fully-victimized buckets vanish from the map
-        if _commit_merge_version(
-            local,
-            version,
-            new_version,
-            attempt_dir,
-            buckets,
-            # maintenance never re-buckets: the committed layout (when the
-            # state has one) rides into the new manifest unchanged
-            man.get("layout"),
-            # maintenance never evolves columns either, but stamp from the
-            # written frame so a pre-stamp state gains its stamp here too
-            _stamp_schema(out.schema, spec.type),
-        ):
-            _gc_merge_state(local, spec.merge_keep_versions)
-            return removed
-        shutil.rmtree(attempt_dir, ignore_errors=True)
-    raise MergeCommitConflictError(
-        f"{op_name} {spec.path}: lost the commit CAS "
-        f"{_MERGE_COMMIT_RETRIES} times in a row — state is consistent; "
-        "re-run to rewrite against the newest snapshot"
-    )
+        if not touched:
+            return None
+        tdirs = [
+            os.path.join(local, bucket_dirs[str(b)])
+            for b in touched
+            if str(b) in bucket_dirs
+        ]
+        victims, survivors = split(_read_state(spark, man, spec.type, tdirs))
+        return _Rewrite(survivors, touched, man.get("layout"), victims.count())
+
+    return _commit_loop(spark, spec, plan, op_name)
 
 
 def purge_tombstones(spark, spec: SinkSpec) -> int:
@@ -1108,10 +996,12 @@ def purge_tombstones(spark, spec: SinkSpec) -> int:
     tombstone could re-insert the key; run purges on a schedule slower
     than the slowest legitimate replayer).
 
-    The rewrite is :func:`_rewrite_without`: marker-true rows are the
-    victims (found via a columnar marker-only scan — row-group stats skip
-    tombstone-free files), only their buckets are rewritten, the commit is
-    the standard staged-tree CAS. The purge is CDC-invisible by
+    The rewrite is :func:`_rewrite_without`'s plan step: marker-true rows
+    are the victims (found via a columnar marker-only scan — row-group
+    stats skip tombstone-free files) and only their buckets are rewritten.
+    The commit is the merge sink's own staged-tree CAS loop
+    (:func:`_commit_loop`): same attempt trees, clustered write, stale
+    snapshot retry, pointer flip and GC. The purge is CDC-invisible by
     construction: a version diff read with ``delete_col`` filters
     tombstones from BOTH snapshots, so the feed for a purge commit is
     empty — physical GC, not a logical change.
@@ -1148,11 +1038,12 @@ def compact_merge_state(
     Same :func:`_rewrite_without` discipline as :func:`purge_tombstones`:
     victim discovery is a semi-join (Catalyst picks broadcast when
     ``stale`` is small — the usual case for a deletion batch), only
-    victim-holding buckets are rewritten, staged-tree CAS commit,
-    fully-stale buckets drop out of the manifest. Like a purge, the
-    compaction removes rows a ``delete_col`` CDC read never saw as live
-    content — run it after the corresponding upstream retirements have
-    been delivered downstream, on the same gc-grace reasoning.
+    victim-holding buckets are rewritten through the shared
+    :func:`_commit_loop`, fully-stale buckets drop out of the manifest.
+    Like a purge, the compaction removes rows a ``delete_col`` CDC read
+    never saw as live content — run it after the corresponding upstream
+    retirements have been delivered downstream, on the same gc-grace
+    reasoning.
 
     ``stale`` may be a DataFrame or a ZERO-ARG CALLABLE returning one.
     Pass a callable whenever the victim set derives from a merge-state

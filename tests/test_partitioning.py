@@ -13,9 +13,10 @@ from pyspark.sql import functions as F
 from embulk_executor_mapreduce_spark.errors import PartitionError
 from embulk_executor_mapreduce_spark.operators.partitioning import (
     bucket_expr,
-    repartition_by_bucket,
     salt_expr,
 )
+from embulk_executor_mapreduce_spark.plans.compiler import BUCKET_COL, _apply_stages
+from embulk_executor_mapreduce_spark.spec import load_spec
 
 T0 = dt.datetime(2024, 1, 15, 10, 0, 0)
 EPOCH0 = int(T0.replace(tzinfo=dt.timezone.utc).timestamp())
@@ -23,6 +24,30 @@ EPOCH0 = int(T0.replace(tzinfo=dt.timezone.utc).timestamp())
 
 def _ts_df(spark, *dts):
     return spark.createDataFrame([Row(ts=d) for d in dts])
+
+
+def _staged(df, reducers, split=1, keep_bucket=False):
+    """``df`` through the loader's own stage pipeline (the exchange
+    ``run_pipeline`` runs), partitioned on ``ts`` by hour."""
+    spec = load_spec(
+        {
+            "in": {"type": "parquet", "path": "unused"},
+            "out": {
+                "type": "parquet",
+                "path": "unused",
+                "partition_by_bucket": keep_bucket,
+            },
+            "exec": {
+                "reducers": reducers,
+                "partitioning": {
+                    "column": "ts",
+                    "unit": "hour",
+                    "map_side_partition_split": split,
+                },
+            },
+        }
+    )
+    return _apply_stages(df, spec)
 
 
 def _buckets(df, col="ts", **kw):
@@ -99,7 +124,7 @@ def test_salt_spreads_hot_bucket(spark):
     rows = [Row(ts=T0 + dt.timedelta(seconds=i % 3000)) for i in range(4000)]
     df = spark.createDataFrame(rows)
     parts = (
-        repartition_by_bucket(df, "ts", "hour", reducers=8, map_side_partition_split=8)
+        _staged(df, reducers=8, split=8)
         .withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
         .count()
@@ -114,9 +139,9 @@ def test_bucket_routing_invariant(spark):
     rows = [Row(ts=T0 + dt.timedelta(hours=h, minutes=m)) for h in range(6) for m in range(30)]
     df = spark.createDataFrame(rows)
     got = (
-        repartition_by_bucket(df, "ts", "hour", reducers=4, keep_bucket=True)
+        _staged(df, reducers=4, keep_bucket=True)
         .withColumn("pid", F.spark_partition_id())
-        .groupBy("__bucket")
+        .groupBy(BUCKET_COL)
         .agg(F.countDistinct("pid").alias("n_pids"))
         .collect()
     )
