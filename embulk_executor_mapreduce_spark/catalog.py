@@ -7941,101 +7941,5 @@ def q_hybrid_rrf_batch_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rrf_fuse_batch([lex_rank, sem_rank], k=10)
 
 
-# The round driver snapshots only the FIRST 50 entries() queries per round.
-# Through r11 the window was a hand-curated tuple re-derived from
-# blast-radius arithmetic every round; r12 encodes the rotation policy
-# itself (VERDICT r11 item 8): entries() orders queries by VERIFICATION
-# NEED — (0) never driver-verified, then (1) body hash changed since the
-# last green driver row (oldest evidence first), then (2) green at current
-# hash, oldest evidence first — so new rows and flagged blast-radius rows
-# claim window slots automatically and the spare slots always drain the
-# oldest evidence. The body hash replicates scripts/window_check.py
-# exactly (fn source + oracle + one-level `from .X import` module
-# sources); scripts/VERIFIED.json is the evidence record, maintained by
-# scripts/record_verified.py at round start. _VERIFY_FIRST survives as a
-# manual OVERRIDE for rows that must lead the window regardless of the
-# policy (normally empty).
-_VERIFY_FIRST: tuple = ()
-
-_IMPORT_RE = None
-_ORDER_CACHE: list | None = None
-
-
-def _body_hash(entry, _file_cache: dict) -> str:
-    """sha256(fn source + oracle + one-level imported module sources) —
-    MUST stay bit-compatible with scripts/window_check.py:body_hash."""
-    import hashlib
-    import inspect
-    import os
-    import re
-
-    global _IMPORT_RE
-    if _IMPORT_RE is None:
-        _IMPORT_RE = re.compile(r"from \.([\w.]+) import")
-    src = inspect.getsource(entry.fn)
-    parts = [src, entry.oracle or "<no-oracle>"]
-    pkg = os.path.dirname(os.path.abspath(__file__))
-    for dotted in sorted(set(_IMPORT_RE.findall(src))):
-        p = os.path.join(pkg, dotted.replace(".", "/") + ".py")
-        if p not in _file_cache:
-            try:
-                with open(p) as f:
-                    _file_cache[p] = f.read()
-            except OSError:
-                _file_cache[p] = None
-        if _file_cache[p] is not None:
-            parts.append(_file_cache[p])
-    return hashlib.sha256("\n".join(parts).encode()).hexdigest()
-
-
-def _round_key(tag) -> tuple:
-    """Ordering key for round tags: the embedded integer first (so 'r9' ==
-    round 9 sorts before 'r10' and 'r100' sorts after 'r11' — lexicographic
-    comparison breaks on both, r12 review finding 7; record_verified takes
-    the tag as a free-form CLI arg), then the raw string as a deterministic
-    tie-break with NO freshness meaning — same-integer tags ('r9' vs
-    'r09') are the same round and their relative order is arbitrary."""
-    import re
-
-    m = re.search(r"(\d+)", str(tag))
-    return (int(m.group(1)) if m else -1, str(tag))
-
-
-def _verification_order() -> list:
-    """Names in driver-window priority order (computed once per process —
-    code and VERIFIED.json are immutable within a run). Falls back to
-    registration order when the evidence record is unavailable (installed
-    as a bare package, no scripts/ checkout)."""
-    global _ORDER_CACHE
-    if _ORDER_CACHE is not None:
-        return _ORDER_CACHE
-    import json
-    import os
-
-    names = list(REGISTRY)
-    try:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        with open(os.path.join(root, "scripts", "VERIFIED.json")) as f:
-            verified = json.load(f)
-        file_cache: dict = {}
-
-        def key(n):
-            rec = verified.get(n)
-            if rec is None:
-                return (0, (-1, ""), n)  # never driver-verified
-            if rec["hash"] != _body_hash(REGISTRY[n], file_cache):
-                return (1, _round_key(rec["round"]), n)  # changed since green
-            return (2, _round_key(rec["round"]), n)  # green — oldest first
-
-        _ORDER_CACHE = sorted(names, key=key)
-    except Exception:  # noqa: BLE001 — ordering is best-effort, never fatal
-        _ORDER_CACHE = names
-    return _ORDER_CACHE
-
-
 def entries() -> dict[str, CatalogEntry]:
-    ordered = {n: REGISTRY[n] for n in _VERIFY_FIRST if n in REGISTRY}
-    ordered.update(
-        (n, REGISTRY[n]) for n in _verification_order() if n not in ordered
-    )
-    return ordered
+    return dict(REGISTRY)

@@ -7,15 +7,16 @@ word-frequency table. That table is VOCABULARY-sized — one row per distinct
 word, ~1M rows at any corpus size (the operator's own scale contract) — so
 past the single corpus pass that builds it, the whole merge loop is work
 over a driver-collectable frame. This module dispatches exactly like the
-round's connected-components union-find fast path (``dedup.py``,
-``_CC_COLLECT_MAX_PAIRS``): up to ``_BPE_COLLECT_MAX_WORDS`` distinct words
-(limit-capped collect, a few MB of strings), the merge loop runs locally as
-the textbook in-memory algorithm — which is also how production tokenizer
-trainers work (Sennrich et al. 2016 release, SentencePiece, HF tokenizers:
-one pass builds word counts, the merge loop is in-memory; a distributed
-loop at real merge counts — 30k+ for a production vocab — would be 2 jobs
-per merge). Over the cap, the UNCHANGED distributed loop runs on the same
-(checkpointed) word table, so the corpus is never re-scanned.
+connected-components union-find fast path (``dedup.py``) and shares its
+collect budget (``plans.inspect.COLLECT_MAX_ROWS``): up to that many
+distinct words (limit-capped collect, a few MB of strings), the merge loop
+runs locally as the textbook in-memory algorithm — which is also how
+production tokenizer trainers work (Sennrich et al. 2016 release,
+SentencePiece, HF tokenizers: one pass builds word counts, the merge loop
+is in-memory; a distributed loop at real merge counts — 30k+ for a
+production vocab — would be 2 jobs per merge). Over the cap, the UNCHANGED
+distributed loop runs on the same (checkpointed) word table, so the corpus
+is never re-scanned.
 
 Equivalence to the distributed loop is exact and pinned
 (``tests/test_bpe_local.py``): integer pair counts, the same
@@ -44,13 +45,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..plans.inspect import collect_at_most
 from .text import _bpe_merge_loop, _bpe_words
-
-# One row per DISTINCT word; ~35 bytes/row at English-ish word lengths, so
-# the cap bounds the collect at a few MB — the k-means-literal / union-find
-# collect class (guide §5: the driver does no DATA work; a vocabulary is an
-# artifact, not data). Same cap value as dedup._CC_COLLECT_MAX_PAIRS.
-_BPE_COLLECT_MAX_WORDS = 65_536
 
 # Schemas match the distributed paths exactly (nullability included):
 # merge_rank is a non-null literal; pair/merged come from a min-aggregate
@@ -87,8 +83,11 @@ def _collect_words(words: DataFrame) -> tuple[DataFrame, list | None]:
     side of the trade at 100 TB; a leaked few-MB block per train call on
     toy corpora is not."""
     ck = words.localCheckpoint(eager=False)
-    rows = ck.limit(_BPE_COLLECT_MAX_WORDS + 1).collect()
-    if len(rows) > _BPE_COLLECT_MAX_WORDS:
+    # one row per DISTINCT word, ~35 bytes/row at English-ish word lengths:
+    # the shared budget bounds the collect at a few MB (a vocabulary is an
+    # artifact, not data)
+    rows = collect_at_most(ck)
+    if rows is None:
         return ck, None
     return ck, [(r[0], r[1]) for r in rows]
 

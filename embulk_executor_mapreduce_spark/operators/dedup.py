@@ -420,15 +420,6 @@ def simhash64_oracle_sql(table: str, text_col: str, id_col: str) -> str:
     """
 
 
-#: small-graph fast-path cap for connected_components (r17): up to this
-#: many verified pairs are collected (limit-capped — the probe can never
-#: pull more than cap+1 rows) and closed on the driver with a union-find;
-#: ~1 MB of long ids at the cap, the k-means literal-path collect class.
-#: Above it — or for NULL ids / exotic id types — the distributed
-#: min-label-propagation loop below runs unchanged.
-_CC_COLLECT_MAX_PAIRS = 65_536
-
-
 def connected_components(
     pairs: DataFrame,
     a_col: str = "id_a",
@@ -456,8 +447,8 @@ def connected_components(
     size), yet every consumer paid the loop's per-iteration price — join +
     min-agg + eager localCheckpoint + convergence observation, 2-4 Spark
     jobs and their driver gaps even for a few hundred pairs. Up to
-    ``_CC_COLLECT_MAX_PAIRS`` pairs (limit-capped probe: ~1 MB of ids on
-    the driver, the k-means literal-path collect class) the transitive
+    ``plans.inspect.COLLECT_MAX_ROWS`` pairs (the shared limit-capped
+    probe: ~1 MB of ids on the driver at the budget) the transitive
     closure now runs as ONE collect + a driver union-find with min-label
     union (the independent reference implementation the loop has always
     been pinned against) + a sorted local frame — the same (node, min
@@ -483,12 +474,12 @@ def connected_components(
         pairs = pairs.select(
             F.col(a_col).alias(a_col), F.col(b_col).alias(b_col)
         ).localCheckpoint(eager=False)
-        rows = (
+        from ..plans.inspect import collect_at_most
+
+        rows = collect_at_most(
             pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-            .limit(_CC_COLLECT_MAX_PAIRS + 1)
-            .collect()
         )
-        if len(rows) <= _CC_COLLECT_MAX_PAIRS and all(
+        if rows is not None and all(
             r[0] is not None and r[1] is not None for r in rows
         ):
             parent: dict = {}
@@ -1087,21 +1078,15 @@ def semantic_dedup_two_level(
     base = df.select(F.col(id_col), as_double(vec_col).alias("v")).withColumn(
         "nrm", F.sqrt(dot(F.col("v"), F.col("v")))
     )
-    from ..plans.inspect import parquet_scan_row_count
-
-    # zero-job planning scalar: n_rows > parquet footer metadata > None —
-    # a count() is only paid when the auto-k sizing below needs a number,
-    # and then its exact result feeds the trainer dispatch too
-    n_plan = int(n_rows) if n_rows is not None else parquet_scan_row_count(df)
     if coarse_k is None or sub_k is None:
-        if n_plan is None:
-            n_plan = df.count()
-        auto = two_level_k(n_plan, target_cluster_docs)
+        from ..plans.inspect import planning_row_count
+
+        auto = two_level_k(planning_row_count(df, n_rows), target_cluster_docs)
         coarse_k = coarse_k if coarse_k is not None else auto
         sub_k = sub_k if sub_k is not None else auto
 
     sub_assigned, _coarse, _subc = _two_level_train_assign(
-        base, id_col, coarse_k, sub_k, iters, planning_rows=n_plan
+        base, id_col, coarse_k, sub_k, iters
     )
     dups = _leaf_dups(sub_assigned, id_col, threshold_micro)
     return sub_assigned.join(dups, on=id_col, how="left_anti").select(
@@ -1195,7 +1180,6 @@ def _two_level_train_assign(
     sub_k: int,
     iters: int,
     coarse_train_filter=None,
-    planning_rows: int | None = None,
 ):
     """Shared two-level machinery: coarse train + cosine cell assignment +
     grouped per-cell sub-training + L2 leaf assignment. Returns
@@ -1215,7 +1199,6 @@ def _two_level_train_assign(
         k=coarse_k,
         iters=iters,
         train_filter=coarse_train_filter,
-        planning_rows=planning_rows,
     )
     assigned = _coarse_assign(base, coarse, id_col)
 
@@ -1231,12 +1214,6 @@ def _two_level_train_assign(
     # LEVEL 2 — per-cell sub-centroids, ALL cells in one grouped pass.
     # train_filter=lit(True) selects the row_number-per-group init (ids
     # inside a cell are arbitrary, so the flat `id < k` init can't seed it).
-    # planning_rows rides down (r17 optimization round 2): the assignment
-    # is row-for-row the training input, so a caller that can size its
-    # corpus from parquet footers makes the grouped sub-train KNOWN-sized
-    # too — known-small dispatches to the driver-local trainer, which the
-    # checkpointed (LogicalRDD, footer-unsizable) input otherwise never
-    # could. Unknown stays None and the literal path keeps serving it.
     subc = kmeans_train(
         assigned,
         id_col,
@@ -1245,7 +1222,6 @@ def _two_level_train_assign(
         iters=iters,
         group_cols=("cell",),
         train_filter=F.lit(True),
-        planning_rows=planning_rows,
     )
     sub_assigned = _sub_assign(assigned, subc, id_col)
 

@@ -39,21 +39,6 @@ from pyspark.sql import functions as F
 
 PR_SCALE = 10**12
 
-#: driver-local PageRank cap (r17 second optimization round): a DISTINCT
-#: edge set this small (a few MB of id pairs — the union-find / k-means
-#: collect class) runs every iteration on the driver instead of paying
-#: ~2 jobs + a checkpoint per iteration plus the node-count job. The
-#: whole computation is exact BIGINT arithmetic (that is the module's
-#: exactmath contract), so the local mirror is trivially bit-equal —
-#: every operation is the same integer expression, order-free. Over the
-#: cap (or NULL endpoints, or plan-inspection runs with
-#: ``checkpoint=False``) the distributed loop runs unchanged; the capped
-#: collect reads the distinct-edge cache the loop would materialize
-#: anyway, so the over-cap probe costs one bounded collect, never an
-#: extra corpus pass.
-_PR_COLLECT_MAX_EDGES = 65_536
-
-
 def _rank_schema(node_field, redistribute_dangling: bool):
     """The ``(node, rank)`` schema of a driver-built result. Rank
     nullability mirrors the loop's final select: the plain update is lit +
@@ -84,9 +69,21 @@ def _pagerank_local(
     positive BIGINTs, so Python ``//`` == Spark ``DIV`` == DuckDB ``//``.
     Duplicate edge rows (a caller mis-declaring ``edges_distinct``)
     contribute per ROW, exactly as the loop's join does. Returns ``None``
-    to fall back on an over-cap edge set or NULL endpoints."""
-    rows = e.limit(_PR_COLLECT_MAX_EDGES + 1).collect()
-    if len(rows) > _PR_COLLECT_MAX_EDGES:
+    to fall back on an over-cap edge set or NULL endpoints.
+
+    The edge set is driver-sized when it fits the shared collect budget
+    (``plans.inspect.COLLECT_MAX_ROWS``, a few MB of id pairs): every
+    iteration then runs here instead of paying ~2 jobs + a checkpoint per
+    iteration plus the node-count job. The whole computation is exact
+    BIGINT arithmetic (the module's exactmath contract), so the local
+    mirror is bit-equal — every operation is the same integer expression,
+    order-free. The capped collect reads the distinct-edge cache the loop
+    would materialize anyway, so an over-cap probe costs one bounded
+    collect, never an extra corpus pass."""
+    from ..plans.inspect import collect_at_most
+
+    rows = collect_at_most(e)
+    if rows is None:
         return None
     edges = []
     for r in rows:

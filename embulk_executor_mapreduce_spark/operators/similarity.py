@@ -238,171 +238,23 @@ def ivf_centroids(
 #: reproduce it (exactmath discipline).
 KMEANS_SCALE = 1_000_000
 
-#: literal-centroid training caps (r16): the fast path embeds the centroid
-#: table in the plan as literals, so bound BOTH the row count (expression
-#: tree width / the probe collect) and the total double count (plan size).
-#: Past either cap kmeans_train falls back to the broadcast-join loop —
-#: same values, different plan shape.
-_KMEANS_LITERAL_MAX_CENTROIDS = 1024
-_KMEANS_LITERAL_MAX_VALUES = 131_072
-
-#: minimum KNOWN training-input row count for the literal path (r17,
-#: VERDICT r16 item 4 — the sealed-regression triage came back real):
-#: the literal plan pays a near-constant per-iteration driver cost
-#: (parse + analyze + codegen of the k·dim literal expression) while the
-#: joined loop's per-iteration cost scales with the sample's bytes, so at
-#: SMALL training inputs the joined loop wins (alternating same-session
-#: A/B at 2000 rows × dim 64: joined 2.50/2.50 s vs literal 3.02/2.66 s
-#: on the two k-means bench entries) and at large ones the literal path's
-#: removed exchanges dominate. Dispatch on the zero-job parquet-footer
-#: row count when it exists; UNKNOWN sizes (computed/filtered training
-#: inputs — the incremental sinks' batches) keep the literal path, the
-#: 100 TB-safe default (a training sample that cannot be metadata-sized
-#: is exactly the case the joined loop's per-iteration sample shuffle
-#: can't be assumed cheap for).
-_KMEANS_LITERAL_MIN_ROWS = 65_536
-
 #: unsampled-training guardrail (VERDICT r5 item 6): above this many rows a
 #: ``train_filter=None`` training run warns loudly — 2·iters full corpus
 #: scans is the one accidental scale-killer left in the trained-ANN path.
 #: Codebook quality needs ~1k vectors per centroid, not the corpus.
 KMEANS_MAX_UNSAMPLED_ROWS = 2_000_000
 
-#: driver-local training cap (r17 second optimization round): a KNOWN
-#: training input under ``_KMEANS_LITERAL_MIN_ROWS`` rows AND this many
-#: total doubles (rows × dim, ≤ 32 MB collected) trains entirely on the
-#: driver — the shape every production ANN library uses (FAISS and friends
-#: train IVF/PQ codebooks on an in-memory sample; the distributed loops
-#: here exist for samples that DON'T fit). Over either cap, or on any
-#: guard failure (non-double vectors, NULL/non-finite values, ragged
-#: dims, duplicate ids), the broadcast-join loop runs unchanged.
+#: driver-local training caps: a training input of at most
+#: ``plans.inspect.COLLECT_MAX_ROWS`` rows AND this many total doubles
+#: (rows × dim, ≤ 32 MB collected) trains entirely on the driver — the
+#: shape every production ANN library uses (FAISS and friends train IVF/PQ
+#: codebooks on an in-memory sample; the distributed loop here exists for
+#: samples that DON'T fit). ``k`` is capped too: each local iteration holds
+#: a rows × k distance matrix. Over any cap, or on any guard failure
+#: (non-double vectors, NULL/non-finite values, ragged dims, duplicate
+#: ids), the broadcast-join loop runs unchanged.
 _KMEANS_DRIVER_MAX_VALUES = 4_194_304
-
-
-def _kmeans_iterate_literal(
-    base: DataFrame,
-    g: list[str],
-    cents_rows,
-    cents_schema,
-    iters: int,
-) -> DataFrame:
-    """Lloyd iterations with the centroid table embedded as PLAN LITERALS
-    (see the call site in :func:`kmeans_train` for the full rationale and
-    bounds). Bit-identical to the broadcast-join loop: the argmin comparator
-    is the same ``(-d, -cid)`` struct ordering (``array_max`` and the
-    aggregate ``max(struct)`` share one interpreted ordering), the distance
-    and the per-(cid, pos) sum/count/mean expressions are the same Spark
-    expressions over the same doubles, and empty clusters keep their
-    previous centroid exactly as the old left-join + coalesce did — the
-    driver only reassembles ≤ k·dim metadata values per iteration."""
-    spark = base.sparkSession
-    fields = cents_schema.fieldNames()  # [*g, "cid", "cv"]
-    ng = len(g)
-    rows = [tuple(r[c] for c in fields) for r in cents_rows]
-    if not rows or iters <= 0:
-        return spark.createDataFrame(rows, cents_schema)
-    gtypes = dict(base.dtypes)
-
-    # Candidate expression built as ONE transform lambda over a literal
-    # array-of-arrays, NOT one distance subtree per centroid: a first cut
-    # expanded k dsq trees inline and the ANALYSIS cost alone (optimizer
-    # passes over k·dim·~70 nodes, once per iteration) dwarfed the work it
-    # saved — 24 s of driver gaps on ann_ivf_kmeans_topk at sf0.1. With the
-    # lambda the plan holds one dsq tree + two leaf literals regardless of k.
-    # The literals themselves are rendered as ONE SQL string each (a second
-    # cut used F.lit(list-of-lists), which pyspark expands to one py4j call
-    # PER ELEMENT — ~3 s per iteration at k·dim=4096); CAST('<repr>' AS
-    # DOUBLE) parses through Double.parseDouble, which is correctly rounded,
-    # so the shortest-roundtrip repr reproduces every double bit-for-bit and
-    # constant folding collapses the array to a single Literal.
-    def _d_sql(v: float) -> str:
-        return f"CAST('{v!r}' AS DOUBLE)"
-
-    def _cvs_sql(ts: list) -> str:
-        return (
-            "array("
-            + ",".join(
-                "array(" + ",".join(_d_sql(v) for v in t[-1]) + ")" for t in ts
-            )
-            + ")"
-        )
-
-    def _cids_sql(ts: list) -> str:
-        return "array(" + ",".join(f"{int(t[ng])}L" for t in ts) + ")"
-
-    def cand_of(cvs_arr: Column, cids_arr: Column) -> Column:
-        def one(cv: Column, i: Column) -> Column:
-            d = (
-                dot(F.col("__v"), F.col("__v"))
-                - F.lit(2.0) * dot(F.col("__v"), cv)
-                + dot(cv, cv)
-            )
-            cid = F.element_at(cids_arr, i + F.lit(1))
-            return F.struct(
-                (-d).alias("nd"), (-cid).alias("nc"), cid.alias("cid")
-            )
-
-        return F.transform(cvs_arr, one)
-
-    for _ in range(iters):
-        if g:
-            by_g: dict[tuple, list] = {}
-            for t in rows:
-                by_g.setdefault(t[:ng], []).append(t)
-            gt = gtypes[g[0]]
-            cv_pairs, cid_pairs = [], []
-            for gv, ts in sorted(by_g.items()):
-                key = f"CAST({gv[0]} AS {gt})"
-                cv_pairs.append(f"{key},{_cvs_sql(ts)}")
-                cid_pairs.append(f"{key},{_cids_sql(ts)}")
-            cvs_arr = F.element_at(
-                F.expr("map(" + ",".join(cv_pairs) + ")"), F.col(g[0])
-            )
-            cids_arr = F.element_at(
-                F.expr("map(" + ",".join(cid_pairs) + ")"), F.col(g[0])
-            )
-        else:
-            cvs_arr = F.expr(_cvs_sql(rows))
-            cids_arr = F.expr(_cids_sql(rows))
-        sel = base.select(
-            *g, F.array_max(cand_of(cvs_arr, cids_arr)).alias("__m"), F.col("__v")
-        )
-        if g:
-            # a row whose group has no centroids matched nothing in the old
-            # inner join — drop it here the same way
-            sel = sel.where(F.col("__m").isNotNull())
-        stats = (
-            sel.select(
-                *g,
-                F.col("__m.cid").alias("cid"),
-                F.posexplode(F.col("__v")).alias("pos", "val"),
-            )
-            .groupBy(*g, "cid", "pos")
-            .agg(
-                F.sum(F.floor(F.col("val") * KMEANS_SCALE + F.lit(0.5))).alias("__sum"),
-                F.count(F.lit(1)).alias("__n"),
-            )
-            .select(
-                *g,
-                "cid",
-                "pos",
-                (F.col("__sum") / (F.col("__n") * F.lit(KMEANS_SCALE))).alias("mv"),
-            )
-            .collect()
-        )
-        means: dict[tuple, dict[int, float]] = {}
-        for r in stats:
-            key = tuple(r[c] for c in g) + (r["cid"],)
-            means.setdefault(key, {})[r["pos"]] = r["mv"]
-        new_rows = []
-        for t in rows:
-            pm = means.get(t[: ng + 1])
-            if pm is None:
-                new_rows.append(t)  # empty cluster keeps its previous centroid
-            else:
-                new_rows.append(t[:-1] + ([pm[p] for p in range(len(t[-1]))],))
-        rows = new_rows
-    return spark.createDataFrame(rows, cents_schema)
+_KMEANS_DRIVER_MAX_CENTROIDS = 1024
 
 
 _KMEANS_INTEGRAL_DTYPES = ("tinyint", "smallint", "int", "bigint")
@@ -498,20 +350,26 @@ def _kmeans_train_local(
     iters: int,
     schema,
     sampled: bool,
-    known_rows: int,
 ) -> DataFrame | None:
-    """Collect a KNOWN-small training input and train on the driver (see
-    the dispatch in :func:`kmeans_train`). Returns ``None`` — caller runs
-    the broadcast-join loop unchanged — on any guard failure: non-double
-    vector type, non-integral id type, pathological width (a 1-row probe
-    sizes rows × dim against ``_KMEANS_DRIVER_MAX_VALUES`` BEFORE the full
-    collect), a row count above the gate (a lying ``planning_rows``),
-    NULL/ragged/non-finite vectors, NULL group values, or duplicate ids
-    per group (ill-defined by contract; the loop's per-id argmin collapse
-    is preserved by not racing it)."""
+    """Collect a small training input and train on the driver (see the
+    dispatch in :func:`kmeans_train`). Returns ``None`` — caller runs the
+    broadcast-join loop unchanged — on any guard failure: more than one
+    group column or a non-integral one, ``k`` over
+    ``_KMEANS_DRIVER_MAX_CENTROIDS``, non-double vector type, non-integral
+    id type, more rows than the collect budget (a 1-row probe sizes the
+    budget to ``_KMEANS_DRIVER_MAX_VALUES // dim`` BEFORE the capped
+    collect), NULL/ragged/non-finite vectors, NULL group values, or
+    duplicate ids per group (ill-defined by contract; the loop's per-id
+    argmin collapse is preserved by not racing it)."""
     import math
 
+    from ..plans.inspect import collect_at_most
+
     dtypes = dict(base.dtypes)
+    if len(g) > 1 or (g and dtypes.get(g[0]) not in _KMEANS_INTEGRAL_DTYPES):
+        return None
+    if k > _KMEANS_DRIVER_MAX_CENTROIDS:
+        return None
     if dtypes.get("__v") != "array<double>":
         return None
     if dtypes.get("__vid") not in _KMEANS_INTEGRAL_DTYPES:
@@ -521,15 +379,11 @@ def _kmeans_train_local(
     if not head:
         return spark.createDataFrame([], schema)
     v0 = head[0]["__v"]
-    if v0 is None:
+    if not v0:
         return None
     dim = len(v0)
-    if dim == 0 or known_rows * dim > _KMEANS_DRIVER_MAX_VALUES:
-        return None
-    # cap the probe at the CLAIMED size: a lying planning_rows/n_rows must
-    # be caught after at most known_rows+1 rows, never after 65k wide ones
-    rows = base.limit(known_rows + 1).collect()
-    if len(rows) > known_rows:
+    rows = collect_at_most(base, _KMEANS_DRIVER_MAX_VALUES // dim)
+    if rows is None:
         return None
     parsed, seen = [], set()
     max_abs = 0.0
@@ -574,7 +428,6 @@ def kmeans_train(
     group_cols: tuple[str, ...] = (),
     train_filter: Column | None = None,
     max_unsampled_rows: int | None = KMEANS_MAX_UNSAMPLED_ROWS,
-    planning_rows: int | None = None,
 ) -> DataFrame:
     """Lloyd's k-means as iterative DataFrame aggregates — the trainer that
     replaces the deterministic id-prefix centroid stand-ins.
@@ -621,14 +474,22 @@ def kmeans_train(
     ``train_filter`` — or ``max_unsampled_rows=None`` for a deliberate full
     train — silences it.
 
+    Dispatch: training runs one of two ways. A training input of at most
+    ``plans.inspect.COLLECT_MAX_ROWS`` rows (fewer when wide: at most
+    ``_KMEANS_DRIVER_MAX_VALUES`` doubles) is collected through a
+    LIMIT-capped probe and trained on the driver, bit-equal to the loop
+    above; the same probe decides for connected components, BPE and
+    PageRank. A probe that comes back over the cap, or any guard failure
+    (see :func:`_kmeans_train_local`), runs the broadcast-join loop — the
+    path for very large training samples.
+
     Contract: ``id_col`` must be unique per group (it is a key everywhere
     in this engine — vec_id / doc id). Duplicate ids have ALWAYS been
     ill-defined here: the lowest-id init emits duplicate ``cid`` rows for
     them, so the trained table itself is malformed before any loop-shape
     question arises. (The joined loop's per-id argmin aggregate happens to
-    also collapse duplicate input rows; the literal fast path, which takes
-    the argmin as a projection, does not — neither behavior is part of the
-    contract.)
+    also collapse duplicate input rows; the driver path refuses them and
+    defers to the loop — neither behavior is part of the contract.)
     """
     if train_filter is None and max_unsampled_rows is not None:
         from ..plans.inspect import parquet_scan_row_count
@@ -673,113 +534,23 @@ def kmeans_train(
             )
         )
 
-    # --- LITERAL-CENTROID fast path (r16 optimization, guide §2.3/§2.4) ---
-    # The centroid table is broadcast-sized BY CONSTRUCTION (the flat-k cap
-    # exists because it must broadcast), so when it is also literal-sized the
-    # assign step needs neither the broadcast join nor the per-vector argmin
-    # exchange: embed the centroids as an array-of-structs literal and take
-    # the argmin as a PURE PROJECTION (array_max over the same
-    # (-d, -cid) comparator the join path's max(struct) used — identical
-    # winner, identical doubles). Each iteration then runs as ONE small
-    # action: corpus/sample scan → in-row argmin → posexplode → the SAME
-    # map-side-combinable (cid, pos) sum/count aggregate → a ≤ k·dim-row
-    # collect; the division producing each mean stays IN SPARK (identical
-    # expression), the driver only reassembles arrays and keeps previous
-    # centroids for empty clusters (the old left-join + coalesce, on ≤ k
-    # rows of metadata). vs the joined path this removes, PER ITERATION: the
-    # broadcast build+exchange, the corpus-sized groupBy(__vid) exchange
-    # (one row per vector, vectors riding in the aggregate), the k·dim
-    # means exchange, and the localCheckpoint job — measured 8-9 AQE jobs →
-    # 1-2 at sf0.1, and at 100 TB the training sample no longer shuffles at
-    # all. Bit-equality with the joined path is pinned in
-    # tests/test_dedup_similarity.py::test_kmeans_literal_path_matches_joined.
-    #
-    # Bounds (config, not data): the probe collect is LIMIT-capped, so a
-    # training run whose centroid table exceeds the literal budget (huge k,
-    # or a grouped train over many groups) falls back to the joined loop
-    # unchanged — both collects below are therefore ≤ the caps, driver
-    # memory stays metadata-scale.
-    # Dispatch guards (beyond the literal-size caps): the map-literal
-    # rendering interpolates group values as bare SQL integer literals, so
-    # the fast path requires at most ONE group column of an INTEGRAL dtype
-    # with non-NULL values (PQ's subspace key "s" — the only grouped caller)
-    # — a string/date/NULL group key would render as an unresolved
-    # identifier or wrong expression, and those trains take the joined loop
-    # unchanged. Likewise non-finite init centroid values (degenerate
-    # upstream embeddings) fall back: the joined loop computes inf/NaN
-    # distances arithmetically, while a rendered literal would depend on
-    # cast-string parsing. k > cap skips the probe collect entirely (no
-    # wasted centroid-plan evaluation on trains that can only fall back).
-    # Size gate (r17, VERDICT r16 item 4): a KNOWN-small training input
-    # takes the joined loop — its per-iteration exchanges on a small
-    # sample are cheaper than the literal plan's per-iteration
-    # parse/analyze/codegen (see _KMEANS_LITERAL_MIN_ROWS). The size
-    # probe is parquet-footer metadata, zero jobs; filtered/computed
-    # inputs return None and keep the literal path.
-    _integral = ("tinyint", "smallint", "int", "bigint")
-    _lit_candidate = (
-        k <= _KMEANS_LITERAL_MAX_CENTROIDS
-        and len(g) <= 1
-        and (not g or dict(base.dtypes).get(g[0]) in _integral)
-    )
-    # Size probe ONLY for trains the literal path could take (post-review
-    # r17: a k-over-cap / multi-group train must not pay the footer I/O
-    # for a dispatch that cannot change). planning_rows: a
-    # caller-supplied exact training-row count for inputs the footer
-    # probe can't size (e.g. pq_adc_topk's subspace explode — rows ×
-    # n_sub, deterministic); takes precedence over the probe.
-    _known_rows = None
-    if _lit_candidate:
-        _known_rows = planning_rows
-        if _known_rows is None and train_filter is None:
-            from ..plans.inspect import parquet_scan_row_count as _scan_rows
-
-            _known_rows = _scan_rows(df)
-    if _lit_candidate and (
-        _known_rows is None or _known_rows >= _KMEANS_LITERAL_MIN_ROWS
-    ):
-        cents_rows = cents.limit(_KMEANS_LITERAL_MAX_CENTROIDS + 1).collect()
-        if len(cents_rows) <= _KMEANS_LITERAL_MAX_CENTROIDS:
-            dim = len(cents_rows[0]["cv"]) if cents_rows else 0
-            if (
-                dim * max(len(cents_rows), 1) <= _KMEANS_LITERAL_MAX_VALUES
-                and all(
-                    (not g or r[g[0]] is not None)
-                    and r["cv"] is not None
-                    and all(
-                        v is not None
-                        and v == v  # not NaN
-                        and v not in (float("inf"), float("-inf"))
-                        for v in r["cv"]
-                    )
-                    for r in cents_rows
-                )
-            ):
-                return _kmeans_iterate_literal(base, g, cents_rows, cents.schema, iters)
-
-    # --- DRIVER-LOCAL training fast path (r17 optimization round 2) ---
-    # A KNOWN-small training input (the territory the r17 size gate sent
-    # to the joined loop) fits on the driver by construction — collect it
-    # ONCE and run every Lloyd iteration locally (guide §1.2: the joined
-    # loop's per-iteration broadcast + two exchanges + checkpoint job all
+    # --- DRIVER-LOCAL training fast path ---
+    # A training input that fits the shared collect budget is collected
+    # ONCE and every Lloyd iteration runs locally (the joined loop's
+    # per-iteration broadcast + two exchanges + checkpoint job all
     # disappear; 2 small jobs total instead of ~3 per iteration). This is
     # how production ANN libraries train codebooks — FAISS et al. train
     # IVF/PQ on an in-memory sample — and the trained table was ALREADY
-    # driver-resident in every consumer (it broadcasts). Bit-equality
-    # with the joined loop is pinned test-side; every guard failure falls
-    # through to that loop unchanged. UNKNOWN-size inputs keep the
-    # literal path above (never a speculative collect of something that
-    # might be corpus-sized).
-    if (
-        _lit_candidate
-        and _known_rows is not None
-        and _known_rows < _KMEANS_LITERAL_MIN_ROWS
-    ):
-        local = _kmeans_train_local(
-            base, g, k, iters, cents.schema, train_filter is not None, _known_rows
-        )
-        if local is not None:
-            return local
+    # driver-resident in every consumer (it broadcasts). The probe is a
+    # LIMIT-capped collect, so a corpus-sized input costs one bounded
+    # evaluation before the joined loop runs; no size hint is needed.
+    # Bit-equality with the joined loop is pinned test-side; every guard
+    # failure falls through to that loop unchanged.
+    local = _kmeans_train_local(
+        base, g, k, iters, cents.schema, train_filter is not None
+    )
+    if local is not None:
+        return local
 
     def dsq(a: Column, b: Column) -> Column:
         return dot(a, a) - F.lit(2.0) * dot(a, b) + dot(b, b)
@@ -1109,14 +880,6 @@ def pq_adc_topk(
         # amortized) — encoding + ADC only, no Lloyd's iterations
         codebook = codebook.select("s", "code", as_double("cv").alias("cv"))
     elif train_iters:
-        # size hint for the r17 literal-path gate: the subspace explode
-        # (Generate) defeats the footer probe, but its row count is
-        # exactly base_rows × n_sub — deterministic, zero jobs
-        from ..plans.inspect import parquet_scan_row_count
-
-        base_rows = (
-            parquet_scan_row_count(base) if train_filter is None else None
-        )
         codebook = kmeans_train(
             subs,
             id_col,
@@ -1125,9 +888,6 @@ def pq_adc_topk(
             iters=train_iters,
             group_cols=("s",),
             train_filter=train_filter,
-            planning_rows=(
-                base_rows * n_sub if base_rows is not None else None
-            ),
         ).select("s", F.col("cid").alias("code"), F.col("cv"))
     else:
         codebook = subs.filter(F.col(id_col) < n_codes).select(
@@ -1600,12 +1360,6 @@ def random_projection_oracle_sql(
     """
 
 
-#: driver-local MMR cap: the greedy tail collects n_q × shortlist rel
-#: rows and n_q × shortlist² sim rows — parameter-bounded (never
-#: data-sized), gated against the repo's standard collect budget anyway.
-_MMR_LOCAL_MAX_PAIRS = 65_536
-
-
 def _mmr_greedy_local(
     sl: DataFrame, pairs: DataFrame, k: int, lambda_micro: int
 ) -> DataFrame | None:
@@ -1617,12 +1371,24 @@ def _mmr_greedy_local(
     ``λ·rel − (1−λ)·max_{s∈selected} sim`` with ties to the smallest
     cand_id; a query with fewer candidates than k stops early, exactly as
     the empty window pick does. All arithmetic is BIGINT micro-units.
-    Returns ``None`` (caller keeps the distributed tail) if any rel/sim is
-    NULL."""
+    Returns ``None`` (caller keeps the distributed tail) if either table
+    exceeds the collect budget or any rel/sim is NULL.
+
+    ``pairs`` is derived from ``sl``, so ``sl`` is cached across the two
+    collects: the corpus scan and the shortlist window run once, not once
+    per collect."""
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    sl_rows = sl.select("query_id", "cand_id", "rel", "rn").collect()
-    pair_rows = pairs.collect()
+    from ..plans.inspect import collect_at_most
+
+    sl.persist()
+    try:
+        sl_rows = collect_at_most(sl.select("query_id", "cand_id", "rel", "rn"))
+        pair_rows = collect_at_most(pairs) if sl_rows is not None else None
+    finally:
+        sl.unpersist()
+    if pair_rows is None:
+        return None
     by_q: dict = {}
     for r in sl_rows:
         if r["rel"] is None:
@@ -1793,13 +1559,15 @@ def mmr_rerank_topk(
     # greedy loop in the driver costs k tiny stages" undersold it: the
     # unrolled union re-derives the shortlist lineage per rank and its
     # plan analysis alone dwarfs the work. When the pair matrix fits the
-    # repo's collect class, gather the INTEGER micro-unit rel/sim tables
+    # shared collect budget, gather the INTEGER micro-unit rel/sim tables
     # (the float→micro rounding stays in Spark, so there is no float
     # surface to mirror) and run the greedy argmax locally — identical
     # integer arithmetic, identical (score DESC, cand_id ASC) tie-break.
     # NULL rel/sim (degenerate zero-norm vectors) falls back to the
     # distributed tail rather than mirroring SQL NULL ordering.
-    if len(query_ids) * shortlist * shortlist <= _MMR_LOCAL_MAX_PAIRS:
+    from ..plans import inspect as plan_inspect
+
+    if len(query_ids) * shortlist * shortlist <= plan_inspect.COLLECT_MAX_ROWS:
         local = _mmr_greedy_local(sl, pairs, k, lambda_micro)
         if local is not None:
             return local

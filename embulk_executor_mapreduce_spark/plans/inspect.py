@@ -84,8 +84,7 @@ def parquet_scan_row_count(df: DataFrame) -> int | None:
     ]
     # Project, Repartition(ByExpression) and Sort are COUNT-PRESERVING —
     # a spread_narrow'd or ordered scan still has exactly the footer row
-    # count (r17: the k-means size gate probes the post-spread training
-    # frame; Filter/Join/Generate/Limit and everything else stay None).
+    # count (Filter/Join/Generate/Limit and everything else stay None).
     _count_preserving = (
         "Project",
         "Relation",
@@ -167,6 +166,24 @@ def ancestor_names(
             names.append(name)
             depth = d
     return names
+
+
+#: the one row budget for driver-local fast paths (k-means training,
+#: connected components, BPE, PageRank, the MMR greedy tail): an input of
+#: at most this many rows is collected and solved on the driver, a larger
+#: one runs the distributed loop. Probes go through :func:`collect_at_most`,
+#: so an over-budget input costs one bounded ``limit`` evaluation.
+COLLECT_MAX_ROWS = 65_536
+
+
+def collect_at_most(df: DataFrame, cap: int | None = None) -> list | None:
+    """``df``'s rows when there are at most ``n`` of them, else ``None`` —
+    ``n`` is :data:`COLLECT_MAX_ROWS`, lowered to ``cap`` when given (a
+    caller whose rows are wide). The collect is ``limit(n + 1)``, so it
+    never pulls more than one row past the budget."""
+    n = COLLECT_MAX_ROWS if cap is None else min(cap, COLLECT_MAX_ROWS)
+    rows = df.limit(n + 1).collect()
+    return rows if len(rows) <= n else None
 
 
 def planning_row_count(df: DataFrame, n_rows: int | None = None) -> int:

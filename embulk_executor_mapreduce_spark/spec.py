@@ -243,9 +243,7 @@ class ExecSpec:
     """Executor knobs (reference ``MapReduceExecutorTask.java:17-75``)."""
 
     reducers: int | None = None
-    local_mode_input_tasks: int = 0  # kept for parity; semantics identical either way
     retry_tasks: bool = False
-    job_name: str = "embulk_executor_mapreduce_spark"
 
 
 @dataclass(frozen=True)
@@ -673,9 +671,7 @@ def load_spec(doc: dict[str, Any] | str) -> PipelineSpec:
         )
     execution = ExecSpec(
         reducers=exec_raw.get("reducers"),
-        local_mode_input_tasks=int(exec_raw.get("local_mode_input_tasks", 0)),
         retry_tasks=bool(exec_raw.get("retry_tasks", False)),
-        job_name=exec_raw.get("job_name", "embulk_executor_mapreduce_spark"),
     )
     spec = PipelineSpec(
         source=source,

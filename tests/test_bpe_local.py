@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import pytest
 
+from embulk_executor_mapreduce_spark.plans import inspect as plan_inspect
+
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
@@ -71,7 +73,7 @@ def test_bpe_over_cap_falls_back_to_distributed_loop(spark, monkeypatch):
         return orig(*a, **kw)
 
     monkeypatch.setattr(bpe_local, "_local_merge_loop", spy)
-    monkeypatch.setattr(bpe_local, "_BPE_COLLECT_MAX_WORDS", 3)
+    monkeypatch.setattr(plan_inspect, "COLLECT_MAX_ROWS", 3)
     over_cap = bpe_local.bpe_train(docs, n_merges=6)
     assert calls["local"] == 0
     assert _rows(over_cap) == expected

@@ -28,40 +28,9 @@ def test_rows_only_queries_run(spark, sf_dir):
 @pytest.mark.parametrize("name", NAMES)
 def test_oracle_driver_scale(spark, name):
     """Opt-in (--driver-sweep) sweep at the DRIVER's sf0.01: re-confirms
-    every beyond-window query at driver scale within a round, instead of
-    trusting the body-hash gate alone (VERDICT r4 item 9)."""
+    every query at driver scale (VERDICT r4 item 9)."""
     from tests.conftest import SF_ORACLE
 
     e = catalog.entries()[name]
     ok, msg = compare(spark, SF_ORACLE, e.fn, e.oracle)
     assert ok, f"{name}: {msg}"
-
-
-def test_round_key_orders_numbered_tags():
-    """r12 review finding 7: round tags compare by embedded integer, so
-    unpadded and 3-digit tags order correctly; hashes stay delegated."""
-    from embulk_executor_mapreduce_spark.catalog import _round_key
-
-    tags = ["r100", "r9", "r11", "r08", "r10"]
-    assert sorted(tags, key=_round_key) == ["r08", "r9", "r10", "r11", "r100"]
-    assert _round_key("junk") < _round_key("r0")  # no-integer sorts first
-
-
-def test_window_check_hash_delegates_to_catalog():
-    """One hash implementation (r12 review finding 3): the gate's
-    body_hash must be the catalog's own, bit for bit, on a live entry."""
-    import importlib.util
-    import sys
-    from pathlib import Path
-
-    from embulk_executor_mapreduce_spark import catalog
-
-    root = Path(catalog.__file__).resolve().parent.parent
-    spec = importlib.util.spec_from_file_location(
-        "window_check", root / "scripts" / "window_check.py"
-    )
-    wc = importlib.util.module_from_spec(spec)
-    sys.modules["window_check"] = wc
-    spec.loader.exec_module(wc)
-    name, entry = next(iter(catalog.entries().items()))
-    assert wc.body_hash(entry) == catalog._body_hash(entry, {})

@@ -15,6 +15,7 @@ from embulk_executor_mapreduce_spark.operators.similarity import (
     lsh_bucket_topk,
     pq_adc_topk,
 )
+from embulk_executor_mapreduce_spark.plans import inspect as plan_inspect
 
 SF = "/root/testdata/sf0.001"
 
@@ -770,7 +771,7 @@ def test_connected_components_fast_path_matches_loop(spark, monkeypatch):
     ]
     for df in cases:
         fast = sorted(map(tuple, D.connected_components(df).collect()))
-        monkeypatch.setattr(D, "_CC_COLLECT_MAX_PAIRS", 0)
+        monkeypatch.setattr(plan_inspect, "COLLECT_MAX_ROWS", 0)
         loop = sorted(map(tuple, D.connected_components(df).collect()))
         monkeypatch.undo()
         assert fast == loop
@@ -1129,59 +1130,10 @@ def test_ann_index_compact_survives_aged_out_snapshot(spark, tmp_path):
         == set(range(30)) - deleted
 
 
-def test_kmeans_literal_path_matches_joined(spark, monkeypatch):
-    """The r16 literal-centroid fast path must be BIT-IDENTICAL to the
-    broadcast-join loop it replaces — flat, grouped (PQ subspaces), and
-    train_filter (row_number init) variants, empty clusters included
-    (k above the natural cluster count forces some). Forcing the joined
-    loop by zeroing the literal budget pins the two implementations
-    against each other value-for-value."""
-    from embulk_executor_mapreduce_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    base = emb.select("vec_id", S.as_double("embedding").alias("v"))
-    sub_ix = F.explode(F.array(*[F.lit(s) for s in range(4)])).alias("s")
-    subs = base.select("vec_id", "v", sub_ix).select(
-        "vec_id", "s", F.slice(F.col("v"), F.col("s") * 16 + 1, 16).alias("sv")
-    )
-
-    cases = [
-        ("flat", lambda: S.kmeans_train(base, "vec_id", "v", k=16, iters=3)),
-        (
-            "grouped",
-            lambda: S.kmeans_train(
-                subs, "vec_id", "sv", k=8, iters=2, group_cols=("s",)
-            ),
-        ),
-        (
-            "row_number_init",
-            lambda: S.kmeans_train(
-                base,
-                "vec_id",
-                "v",
-                k=8,
-                iters=2,
-                train_filter=F.col("vec_id") % 3 == 0,
-            ),
-        ),
-    ]
-    for name, run in cases:
-        # force the literal path regardless of the r17 size gate (the
-        # test fixture is a known-small parquet scan, which legitimately
-        # dispatches to the joined loop in production)
-        monkeypatch.setattr(S, "_KMEANS_LITERAL_MIN_ROWS", 0)
-        lit_rows = sorted(map(tuple, run().collect()))
-        monkeypatch.setattr(S, "_KMEANS_LITERAL_MAX_CENTROIDS", 0)
-        join_rows = sorted(map(tuple, run().collect()))
-        monkeypatch.undo()
-        assert lit_rows == join_rows, name
-
-
 def test_kmeans_train_non_integral_group_falls_back(spark):
-    """The literal fast path renders group values as bare SQL integer
-    literals, so a STRING group column must dispatch to the joined loop
-    (post-review r16 guard) — before the guard this raised an
-    AnalysisException from an unresolved identifier in the map literal."""
+    """The driver-local trainer keys groups by Python equality, which
+    matches Spark's grouping exactly only for integral keys, so a STRING
+    group column dispatches to the joined loop — and must still train."""
     from embulk_executor_mapreduce_spark.operators import similarity as S
 
     rows = [("en", i, [float(i), 0.0]) for i in range(10)] + [
@@ -1199,49 +1151,45 @@ def test_kmeans_train_non_integral_group_falls_back(spark):
 
 
 def test_kmeans_size_gate_dispatch(spark, tmp_path, monkeypatch):
-    """r17 size gate (VERDICT r16 item 4, extended by the r17 second
-    optimization round): a KNOWN-small training input (bare parquet scan,
-    footer row count under _KMEANS_LITERAL_MIN_ROWS) now trains on the
-    DRIVER (the collected-sample Lloyd loop), never the literal plan —
-    while an UNKNOWN-size input (computed frame) keeps the literal path,
-    the 100 TB-safe default."""
+    """kmeans_train decides by a capped collect, with no size hint: a
+    parquet scan and an in-memory frame (which no footer can size) both
+    train on the driver, and the in-memory frame over a lowered collect
+    budget takes the joined loop — with bit-equal rows."""
     from embulk_executor_mapreduce_spark.operators import similarity as S
 
-    calls: list[int] = []
-    local_calls: list[int] = []
-    orig = S._kmeans_iterate_literal
-    orig_local = S._kmeans_train_local
+    local_runs: list[int] = []
+    orig = S._kmeans_local_lloyd
 
     def spy(*a, **kw):
-        calls.append(1)
+        local_runs.append(1)
         return orig(*a, **kw)
 
-    def spy_local(*a, **kw):
-        local_calls.append(1)
-        return orig_local(*a, **kw)
-
-    monkeypatch.setattr(S, "_kmeans_iterate_literal", spy)
-    monkeypatch.setattr(S, "_kmeans_train_local", spy_local)
+    monkeypatch.setattr(S, "_kmeans_local_lloyd", spy)
     rows = [(i, [float(i), float(i % 3)]) for i in range(50)]
     p = str(tmp_path / "vecs")
     spark.createDataFrame(rows, "id long, v array<double>").write.parquet(p)
     scan = spark.read.parquet(p)
-    S.kmeans_train(scan, "id", "v", k=4, iters=1).collect()
-    assert not calls and local_calls  # known 50 rows < gate -> driver train
     mem = spark.createDataFrame(rows, "id long, v array<double>")
-    S.kmeans_train(mem, "id", "v", k=4, iters=1).collect()
-    assert calls  # unknown size -> literal path
-    assert len(local_calls) == 1  # driver path never probed for unknown
+
+    def train(df):
+        out = S.kmeans_train(df, "id", "v", k=4, iters=2)
+        return sorted(map(tuple, out.collect()))
+
+    on_scan, on_mem = train(scan), train(mem)
+    assert len(local_runs) == 2  # both inputs trained on the driver
+    monkeypatch.setattr(plan_inspect, "COLLECT_MAX_ROWS", 49)
+    joined = train(mem)
+    assert len(local_runs) == 2  # 50 rows over a 49-row budget -> joined loop
+    assert joined == on_mem == on_scan
 
 
 def test_kmeans_driver_path_matches_joined(spark, tmp_path, monkeypatch):
     """The r17 driver-local trainer must be BIT-IDENTICAL to the
     broadcast-join loop it replaces — flat, sparse flat init (ids not
     starting at 0, so fewer than k centroids), grouped (PQ subspaces),
-    and sampled (row_number init via train_filter + planning_rows)
-    variants, empty clusters included. The joined loop is forced by
-    zeroing the driver-path value budget (the literal path stays out of
-    play: the inputs are KNOWN-small)."""
+    and sampled (row_number init via train_filter) variants, empty
+    clusters included. The joined loop is forced by zeroing the
+    driver-path value budget."""
     from embulk_executor_mapreduce_spark.operators import similarity as S
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -1258,7 +1206,6 @@ def test_kmeans_driver_path_matches_joined(spark, tmp_path, monkeypatch):
         "vec_id", "s", F.slice(F.col("v"), F.col("s") * 16 + 1, 16).alias("sv")
     ).write.parquet(p_subs)
     subs = spark.read.parquet(p_subs)
-    n = scan.count()
 
     cases = [
         ("flat", lambda: S.kmeans_train(scan, "vec_id", "v", k=16, iters=3)),
@@ -1280,7 +1227,6 @@ def test_kmeans_driver_path_matches_joined(spark, tmp_path, monkeypatch):
                 k=8,
                 iters=2,
                 train_filter=F.col("vec_id") % 3 == 0,
-                planning_rows=(n + 2) // 3,
             ),
         ),
     ]
@@ -1292,11 +1238,10 @@ def test_kmeans_driver_path_matches_joined(spark, tmp_path, monkeypatch):
         assert driver_rows == joined_rows, name
 
 
-def test_two_level_planning_rows_dispatch_equivalence(spark, monkeypatch):
-    """r17: semantic_dedup_two_level threads its footer row count into
-    BOTH k-means calls as planning_rows, so the grouped sub-train (whose
-    checkpointed input a footer probe cannot size) dispatches to the
-    driver-local trainer on file-backed corpora. The output must be
+def test_two_level_driver_dispatch_equivalence(spark, monkeypatch):
+    """semantic_dedup_two_level's coarse train AND its grouped sub-train
+    (whose checkpointed input no parquet footer can size) both train on
+    the driver through the capped collect probe. The output must be
     bit-identical with the fast path disabled."""
     from embulk_executor_mapreduce_spark.operators import similarity as S
     from embulk_executor_mapreduce_spark.operators.dedup import (
@@ -1338,8 +1283,17 @@ def test_mmr_driver_greedy_matches_distributed(spark, monkeypatch):
     """The r17 driver-local MMR greedy tail must be BIT-IDENTICAL (rows
     and schema) to the distributed unrolled loop it replaces — including
     score ties (duplicate vectors force them), early-stop when the
-    shortlist runs out before k, and the rank-1 pure-relevance row."""
+    shortlist runs out before k, and the rank-1 pure-relevance row. The
+    local path scans the corpus once: its pair collect reads the cached
+    shortlist, and the cache is released afterwards."""
     from embulk_executor_mapreduce_spark.operators import similarity as S
+
+    probed: list = []
+    orig_collect = plan_inspect.collect_at_most
+
+    def spy(df, cap=None):
+        probed.append((df, plan_inspect.formatted_plan(df)))
+        return orig_collect(df, cap)
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     # duplicate a few vectors so rel/sim ties exercise the cand_id
@@ -1355,8 +1309,16 @@ def test_mmr_driver_greedy_matches_distributed(spark, monkeypatch):
         dict(query_ids=(7,), shortlist=6, k=6, lambda_micro=300_000),
     ]
     for kw in cases:
+        probed.clear()
+        monkeypatch.setattr(plan_inspect, "collect_at_most", spy)
         fast = S.mmr_rerank_topk(data, **kw)
-        monkeypatch.setattr(S, "_MMR_LOCAL_MAX_PAIRS", -1)
+        assert len(probed) == 2, kw  # shortlist, then pairs
+        pairs, pairs_plan = probed[1]
+        assert "InMemoryTableScan" in pairs_plan, kw
+        # a fresh plan over the same frame finds no cache: it was released
+        released = plan_inspect.formatted_plan(pairs.select("*"))
+        assert "InMemoryTableScan" not in released, kw
+        monkeypatch.setattr(plan_inspect, "COLLECT_MAX_ROWS", 0)
         slow = S.mmr_rerank_topk(data, **kw)
         monkeypatch.undo()
         assert fast.schema == slow.schema, kw
@@ -1369,7 +1331,8 @@ def test_kmeans_driver_path_guard_fallbacks(spark, tmp_path, monkeypatch):
     """Guard failures must dispatch to the joined loop, not the local
     trainer: duplicate ids (ill-defined by contract — the loop's per-id
     argmin collapse is preserved), non-finite vector values, ragged
-    dims, and NULL vectors."""
+    dims, and NULL vectors — on parquet scans and on in-memory frames
+    alike (the probe needs no size hint)."""
     from embulk_executor_mapreduce_spark.operators import similarity as S
 
     local_runs: list[int] = []
@@ -1394,10 +1357,10 @@ def test_kmeans_driver_path_guard_fallbacks(spark, tmp_path, monkeypatch):
         ],
     }
     for name, data in bad.items():
+        mem = spark.createDataFrame(data, "id long, v array<double>")
         p = str(tmp_path / name)
-        spark.createDataFrame(data, "id long, v array<double>").write.parquet(p)
-        out = S.kmeans_train(
-            spark.read.parquet(p), "id", "v", k=4, iters=2
-        ).collect()
-        assert not local_runs, name
-        assert len(out) == 4 or name == "dup_ids", name
+        mem.write.parquet(p)
+        for df in (spark.read.parquet(p), mem):
+            out = S.kmeans_train(df, "id", "v", k=4, iters=2).collect()
+            assert not local_runs, name
+            assert len(out) == 4 or name == "dup_ids", name

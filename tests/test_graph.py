@@ -9,6 +9,7 @@ from embulk_executor_mapreduce_spark.operators.graph import (
     pagerank,
     pagerank_cte_sql,
 )
+from embulk_executor_mapreduce_spark.plans import inspect as plan_inspect
 
 
 def _reference_pagerank(edges, iters, scale=PR_SCALE, num=85, den=100):
@@ -77,7 +78,7 @@ def test_pagerank_spark_duckdb_bit_exact(spark, monkeypatch):
     # distributed loop must stay bit-equal to the same oracle
     from embulk_executor_mapreduce_spark.operators import graph as G
 
-    monkeypatch.setattr(G, "_PR_COLLECT_MAX_EDGES", 0)
+    monkeypatch.setattr(plan_inspect, "COLLECT_MAX_ROWS", 0)
     loop = sorted((r.node, r.rank) for r in pagerank(df, iters=5).collect())
     assert loop == want
 
@@ -103,11 +104,12 @@ def test_pagerank_driver_path_dispatch_and_fallbacks(spark, monkeypatch):
         map(tuple, pagerank(df, iters=3, redistribute_dangling=True).collect())
     )
     assert local_runs
-    monkeypatch.setattr(G, "_PR_COLLECT_MAX_EDGES", 0)
+    budget = plan_inspect.COLLECT_MAX_ROWS
+    monkeypatch.setattr(plan_inspect, "COLLECT_MAX_ROWS", 0)
     loop = pagerank(df, iters=3, redistribute_dangling=True)
     assert fast == sorted(map(tuple, loop.collect()))
     assert pagerank(df, iters=3, redistribute_dangling=True).schema == loop.schema
-    monkeypatch.setattr(G, "_PR_COLLECT_MAX_EDGES", 65_536)
+    monkeypatch.setattr(plan_inspect, "COLLECT_MAX_ROWS", budget)
     # n_nodes hint feeds the local arithmetic identically
     n = len({s for s, _ in edges} | {d for _, d in edges})
     with_hint = sorted(
@@ -284,7 +286,7 @@ def test_pagerank_releases_distinct_edge_cache_after_first_iteration(
     # driver-local fast path (which runs no loop and checkpoints nothing)
     from embulk_executor_mapreduce_spark.operators import graph as G
 
-    monkeypatch.setattr(G, "_PR_COLLECT_MAX_EDGES", 0)
+    monkeypatch.setattr(plan_inspect, "COLLECT_MAX_ROWS", 0)
     _CDF.localCheckpoint, _CDF.unpersist = spy_cp, spy_up
     try:
         got = pagerank(df, iters=3, redistribute_dangling=True).collect()
@@ -336,7 +338,7 @@ def test_pagerank_nonbucketed_loop_body_no_edge_side_exchange(
     # loop-shape guard: force past the r17 driver-local fast path
     from embulk_executor_mapreduce_spark.operators import graph as G
 
-    monkeypatch.setattr(G, "_PR_COLLECT_MAX_EDGES", 0)
+    monkeypatch.setattr(plan_inspect, "COLLECT_MAX_ROWS", 0)
     _CDF.localCheckpoint = spy
     try:
         pagerank(
