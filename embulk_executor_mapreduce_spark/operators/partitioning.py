@@ -120,59 +120,6 @@ def bucket_expr(
     return _floor_div(seconds, UNIT_SECONDS[unit]).alias(f"__bucket_{unit}")
 
 
-#: Partitioning-strategy SPI (VERDICT r5 item 5): the reference exposes a
-#: pluggable ``Partitioning`` interface resolved by name
-#: (``Partitioning.java:1-12``, looked up at ``MapReduceExecutor.java:129-137``)
-#: even though only ``"timestamp"`` ships. This registry is the same slot,
-#: mirroring :func:`...sources.readers.register_task_source` for sources: a
-#: strategy is ``fn(df, partitioning_spec) -> Column`` producing the LONG
-#: bucket index the exchange keys on. ``"timestamp"`` stays the only
-#: built-in.
-_PARTITIONING_REGISTRY: dict = {}
-
-
-def register_partitioning(name: str, fn, validate=None) -> None:
-    """Register a named partitioning strategy.
-
-    ``fn(df, spec) -> Column`` computes the bucket index (spec is the
-    pipeline's ``PartitioningSpec`` — ``spec.column`` etc. are available).
-    ``validate(spec) -> None`` (optional) runs at config time and should
-    raise :class:`PartitionError` on a bad spec, mirroring the reference's
-    config-time ConfigException checks."""
-    _PARTITIONING_REGISTRY[name] = (fn, validate)
-
-
-def resolve_partitioning(name: str):
-    """Strategy lookup by name; unknown names raise at config time with the
-    known-strategy list (the reference throws ConfigException when the
-    ``Partitioning`` class for ``partitioning.type`` can't be loaded)."""
-    if name not in _PARTITIONING_REGISTRY:
-        known = sorted({"timestamp", *_PARTITIONING_REGISTRY})
-        raise PartitionError(
-            f"unknown partitioning type {name!r}: known strategies are "
-            f"{known} (register custom ones via register_partitioning)"
-        )
-    return _PARTITIONING_REGISTRY[name]
-
-
-def _timestamp_strategy(df: DataFrame, spec) -> Column:
-    return bucket_expr(df, spec.column, spec.unit, spec.unix_timestamp_unit)
-
-
-def _timestamp_validate(spec) -> None:
-    if spec.unit not in UNIT_SECONDS:
-        raise PartitionError(f"unknown partitioning unit {spec.unit!r}")
-    if not spec.column:
-        raise PartitionError("partitioning.column is required")
-    if spec.unix_timestamp_unit not in UNIX_UNIT_DIVISOR:
-        raise PartitionError(
-            f"unknown unix_timestamp_unit {spec.unix_timestamp_unit!r}"
-        )
-
-
-register_partitioning("timestamp", _timestamp_strategy, _timestamp_validate)
-
-
 def salt_expr(split: int, cols: list[str | Column] | None = None) -> Column:
     """Uniform salt in ``[0, split)`` for hot-bucket spreading, derived from
     ROW CONTENT (xxhash64 over ``cols``) so it is stable across task

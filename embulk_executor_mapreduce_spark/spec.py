@@ -18,7 +18,7 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from .errors import ConfigError, PartitionError
-from .operators.partitioning import MAX_SPLIT
+from .operators.partitioning import MAX_SPLIT, UNIT_SECONDS, UNIX_UNIT_DIVISOR
 from .types import ColumnSpec
 
 _SOURCE_TYPES = {
@@ -162,11 +162,10 @@ class FilterSpec:
 class PartitioningSpec:
     """Reference ``partitioning:`` block (``TimestampPartitioning.java:122-150``).
 
-    ``type`` resolves through the strategy registry
-    (:func:`..operators.partitioning.register_partitioning`) — the
-    reference's pluggable ``Partitioning`` SPI (``Partitioning.java:1-12``,
-    name lookup at ``MapReduceExecutor.java:129-137``). ``"timestamp"`` is
-    the only built-in, exactly as the reference ships."""
+    ``type`` names the strategy; ``"timestamp"`` is the only one, exactly
+    as the reference ships (its ``Partitioning`` SPI,
+    ``Partitioning.java:1-12``, has a single implementation), and an
+    unknown name raises at config time with the known-strategy list."""
 
     type: str = "timestamp"
     unit: str = "hour"
@@ -175,11 +174,19 @@ class PartitioningSpec:
     map_side_partition_split: int = 1
 
     def validate(self) -> None:
-        from .operators.partitioning import resolve_partitioning
-
-        _, validate = resolve_partitioning(self.type)  # raises on unknown
-        if validate is not None:
-            validate(self)
+        if self.type != "timestamp":
+            raise PartitionError(
+                f"unknown partitioning type {self.type!r}: known strategies "
+                "are ['timestamp']"
+            )
+        if self.unit not in UNIT_SECONDS:
+            raise PartitionError(f"unknown partitioning unit {self.unit!r}")
+        if not self.column:
+            raise PartitionError("partitioning.column is required")
+        if self.unix_timestamp_unit not in UNIX_UNIT_DIVISOR:
+            raise PartitionError(
+                f"unknown unix_timestamp_unit {self.unix_timestamp_unit!r}"
+            )
         if not (1 <= self.map_side_partition_split <= MAX_SPLIT):
             raise PartitionError(
                 f"map_side_partition_split must be in [1, {MAX_SPLIT}]"

@@ -274,6 +274,98 @@ def stateful_user_rollup(events: DataFrame) -> DataFrame:
     )
 
 
+def _claim_tagged_sink(
+    state_path: str,
+    corpus_path: str,
+    merge_key: tuple[str, ...],
+    merge_order: tuple[str, ...],
+    merge_buckets: int,
+    step,
+):
+    """The one batch body behind every claim-tagged ``foreachBatch`` sink
+    (exact, near-dup, semantic, two-level semantic, image): persist the
+    batch, read the committed state (explicit :func:`_artifacts_ready`
+    probe, not try/except — a read error on a PRESENT state must surface,
+    never silently dedup against nothing), run the sink's ``step``, then
+    write.
+
+    ``step(batch, state, claim)`` returns ``(corpus_rows, delta,
+    artifact_writes)``: the batch's surviving corpus rows, the state delta
+    to merge on ``merge_key`` ordered by ``merge_order``, and zero-arg
+    artifact writers (trained centroids) that run sequentially and FIRST —
+    a crash after them re-loads the identical artifacts, a crash before
+    them retrains bit-identically (deterministic trainers).
+
+    Exactly-once from at-least-once: ``foreachBatch`` may re-run a batch
+    after a partial failure, so both remaining writes are per-batch
+    idempotent —
+
+    * the corpus rows go to a batch-scoped partition directory
+      (``ingest_batch=<id>``, mode=overwrite): a retry overwrites its own
+      rows, never duplicates them;
+    * the state merge is keyed with a deterministic delta, so re-merging
+      it is a no-op;
+    * ``step`` dedups with ``claim=lit(batch_id)``: a retry whose state
+      merge already committed re-admits exactly its own claims and
+      reproduces the same corpus rows (without the claim column, the
+      retry would see its own rows in state, emit nothing, and the dir
+      overwrite would LOSE the batch).
+
+    Being idempotent in ANY completion order, the corpus write and the
+    state merge run as independent concurrent actions
+    (:func:`...session.run_independent_actions`), so one action's driver
+    planning tail hides under the other's execution."""
+    from ..session import run_independent_actions
+    from ..sinks.writer import read_merge_state, write_sink
+    from ..spec import SinkSpec
+
+    sink = SinkSpec(
+        type="parquet",
+        path=state_path,
+        mode="merge",
+        merge_key=merge_key,
+        merge_order=merge_order,
+        merge_buckets=merge_buckets,
+    )
+
+    def _process(batch: DataFrame, batch_id: int) -> None:
+        spark = batch.sparkSession
+        # the step runs several actions over the same micro-batch scan
+        batch = batch.persist()
+        try:
+            state = (
+                read_merge_state(spark, state_path)
+                if _artifacts_ready(state_path)
+                else None
+            )
+            novel, delta, artifact_writes = step(batch, state, F.lit(batch_id))
+            for write in artifact_writes:
+                write()
+            run_independent_actions(
+                lambda: novel.write.mode("overwrite").parquet(
+                    f"{corpus_path}/ingest_batch={batch_id}"
+                ),
+                lambda: write_sink(delta, sink),
+            )
+        finally:
+            batch.unpersist()
+
+    return _process
+
+
+def _run_foreach_batch(stream: DataFrame, process, checkpoint: str) -> None:
+    """Drive ``stream`` through the ``foreachBatch`` body ``process`` to
+    completion (availableNow — bounded replay of the unbounded crawl; the
+    checkpoint + claim-tagged state give exactly-once across restarts)."""
+    q = (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
 def incremental_dedup_sink(
     state_path: str,
     corpus_path: str,
@@ -285,72 +377,20 @@ def incremental_dedup_sink(
     micro-batch keeps only never-seen content (against the persisted
     fingerprint state AND within the batch), appends it to the corpus, and
     merges the fingerprint delta into state through the bucket-pruned merge
-    sink — per-batch cost is O(batch), never O(corpus) or O(state).
-
-    Exactly-once from at-least-once: ``foreachBatch`` may re-run a batch
-    after a partial failure, so both writes are per-batch idempotent —
-
-    * the corpus append goes to a batch-scoped partition directory
-      (``ingest_batch=<id>``, mode=overwrite): a retry overwrites its own
-      rows, never duplicates them;
-    * the state merge is keyed on ``text_hash`` with a deterministic delta,
-      so re-merging it is a no-op;
-    * :func:`...operators.dedup.incremental_dedup` is called with
-      ``claim=lit(batch_id)``: a retry whose state merge already committed
-      re-admits exactly its own claims and reproduces the same corpus rows
-      (without the claim column, the retry would see its fingerprints in
-      state, emit an empty ``novel``, and the dir overwrite would LOSE the
-      batch).
-
-    Whatever interleaving of crash/retry occurs, replaying the batch
-    converges to the same corpus + state. Returned function is also the unit
-    the retry tests drive directly.
-    """
+    sink keyed on ``text_hash`` — per-batch cost is O(batch), never
+    O(corpus) or O(state). Exactly-once construction:
+    :func:`_claim_tagged_sink`. The returned function is also the unit the
+    retry tests drive directly."""
     from ..operators.dedup import incremental_dedup
-    from ..session import run_independent_actions
-    from ..sinks.writer import read_merge_state, write_sink
-    from ..spec import SinkSpec
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        # novel + delta are two actions over the same micro-batch scan
-        batch = batch.persist()
-        try:
-            # explicit existence probe, not try/except: a read error on a
-            # PRESENT state must surface, never silently dedup against
-            # nothing (r13 review finding on the artifact loaders)
-            seen = (
-                read_merge_state(spark, state_path)
-                if _artifacts_ready(state_path)
-                else None
-            )
-            novel, delta = incremental_dedup(
-                batch, seen, text_col, id_col, claim=F.lit(batch_id)
-            )
-            # corpus append ∥ state merge (r16, guide §2.6): independent
-            # actions, each idempotent in ANY completion order per the
-            # exactly-once construction above (batch-scoped overwrite dir
-            # + claim-tagged keyed merge)
-            run_independent_actions(
-                lambda: novel.write.mode("overwrite").parquet(
-                    f"{corpus_path}/ingest_batch={batch_id}"
-                ),
-                lambda: write_sink(
-                    delta,
-                    SinkSpec(
-                        type="parquet",
-                        path=state_path,
-                        mode="merge",
-                        merge_key=("text_hash",),
-                        merge_order=("keep_doc_id",),
-                        merge_buckets=merge_buckets,
-                    ),
-                ),
-            )
-        finally:
-            batch.unpersist()
+    def step(batch, seen, claim):
+        novel, delta = incremental_dedup(batch, seen, text_col, id_col, claim=claim)
+        return novel, delta, ()
 
-    return _process
+    return _claim_tagged_sink(
+        state_path, corpus_path, ("text_hash",), ("keep_doc_id",),
+        merge_buckets, step,
+    )
 
 
 def run_incremental_dedup_stream(
@@ -364,17 +404,13 @@ def run_incremental_dedup_stream(
 ) -> None:
     """Drive a document stream through :func:`incremental_dedup_sink` to
     completion (availableNow — bounded replay of the unbounded crawl)."""
-    q = (
-        docs.writeStream.foreachBatch(
-            incremental_dedup_sink(
-                state_path, corpus_path, text_col, id_col, merge_buckets
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        docs,
+        incremental_dedup_sink(
+            state_path, corpus_path, text_col, id_col, merge_buckets
+        ),
+        checkpoint,
     )
-    q.awaitTermination()
 
 
 def incremental_neardup_sink(
@@ -386,57 +422,21 @@ def incremental_neardup_sink(
     min_matches: int = 12,
 ):
     """``foreachBatch`` body for the continuous-crawl NEAR-dup loop — the
-    fuzzy sibling of :func:`incremental_dedup_sink`, with the same
-    exactly-once construction: batch-scoped idempotent corpus dirs, a
-    deterministic keyed state merge, and
-    ``incremental_minhash_dedup(claim=lit(batch_id))`` so a retry whose
-    index merge already committed ignores its own claims and reproduces
-    its corpus rows instead of losing them."""
+    fuzzy sibling of :func:`incremental_dedup_sink`: MinHash band rows
+    merge into the band index on ``(id, band)``, with the same
+    exactly-once construction (:func:`_claim_tagged_sink`)."""
     from ..operators.dedup import incremental_minhash_dedup
-    from ..session import run_independent_actions
-    from ..sinks.writer import read_merge_state, write_sink
-    from ..spec import SinkSpec
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        batch = batch.persist()
-        try:
-            seen = (
-                read_merge_state(spark, state_path)
-                if _artifacts_ready(state_path)
-                else None
-            )
-            novel, delta = incremental_minhash_dedup(
-                batch,
-                seen,
-                text_col,
-                id_col,
-                min_matches=min_matches,
-                claim=F.lit(batch_id),
-            )
-            # corpus append ∥ band-index merge (r16, guide §2.6):
-            # independent actions, idempotent in ANY completion order per
-            # the exactly-once construction above
-            run_independent_actions(
-                lambda: novel.write.mode("overwrite").parquet(
-                    f"{corpus_path}/ingest_batch={batch_id}"
-                ),
-                lambda: write_sink(
-                    delta,
-                    SinkSpec(
-                        type="parquet",
-                        path=state_path,
-                        mode="merge",
-                        merge_key=(id_col, "band"),
-                        merge_order=("band_key",),
-                        merge_buckets=merge_buckets,
-                    ),
-                ),
-            )
-        finally:
-            batch.unpersist()
+    def step(batch, seen, claim):
+        novel, delta = incremental_minhash_dedup(
+            batch, seen, text_col, id_col, min_matches=min_matches, claim=claim
+        )
+        return novel, delta, ()
 
-    return _process
+    return _claim_tagged_sink(
+        state_path, corpus_path, (id_col, "band"), ("band_key",),
+        merge_buckets, step,
+    )
 
 
 def incremental_semantic_sink(
@@ -452,78 +452,46 @@ def incremental_semantic_sink(
 ):
     """``foreachBatch`` body for the continuous-crawl SEMANTIC dedup loop —
     the embedding sibling of :func:`incremental_neardup_sink`, same
-    exactly-once construction (batch-scoped idempotent corpus dirs,
-    deterministic keyed state merge, ``claim=lit(batch_id)`` so a retry
-    whose state merge committed ignores its own claims).
+    exactly-once construction (:func:`_claim_tagged_sink`).
 
     Centroid lifecycle: the FIRST batch trains the table (deterministic
     Lloyd's — a replay retrains bit-identically, so the overwrite is
-    idempotent) and persists it BEFORE any state mutation; every later
-    batch loads and assigns only. Centroid drift over a long crawl is
-    handled offline (retrain on a sample + one-pass state re-assignment),
-    not in the hot loop."""
+    idempotent) and persists it BEFORE any corpus or state write; every
+    later batch loads and assigns only. The load is an existence probe,
+    not try/except: a transient read error on a PRESENT centroid table
+    must surface — an except branch would silently RETRAIN on this batch
+    and overwrite the table every committed state row was assigned
+    against. Centroid drift over a long crawl is handled offline (retrain
+    on a sample + one-pass state re-assignment), not in the hot loop."""
     from ..operators.dedup import incremental_semantic_dedup
-    from ..session import run_independent_actions
-    from ..sinks.writer import read_merge_state, write_sink
-    from ..spec import SinkSpec
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
+    def step(batch, state, claim):
         spark = batch.sparkSession
-        batch = batch.persist()
-        try:
-            # existence probe, not try/except: a transient read error on a
-            # PRESENT centroid table must surface — the except branch would
-            # silently RETRAIN on this batch and overwrite the table every
-            # committed state row was assigned against (r13 review finding)
-            cents = (
-                spark.read.parquet(centroid_path)
-                if _artifacts_ready(centroid_path)
-                else None
-            )
-            state = (
-                read_merge_state(spark, state_path)
-                if _artifacts_ready(state_path)
-                else None
-            )
-            novel, delta, trained = incremental_semantic_dedup(
-                batch,
-                state,
-                cents,
-                vec_col=vec_col,
-                id_col=id_col,
-                k=k,
-                iters=iters,
-                threshold_micro=threshold_micro,
-                claim=F.lit(batch_id),
-            )
-            if trained is not None:
-                # persist BEFORE corpus/state writes: a crash after this
-                # point re-loads the identical table; a crash before it
-                # retrains bit-identically (deterministic trainer)
-                trained.write.mode("overwrite").parquet(centroid_path)
-            # centroids committed first (the crash rule above); the
-            # remaining corpus append ∥ state merge are independent and
-            # idempotent in ANY completion order (r16, guide §2.6)
-            run_independent_actions(
-                lambda: novel.write.mode("overwrite").parquet(
-                    f"{corpus_path}/ingest_batch={batch_id}"
-                ),
-                lambda: write_sink(
-                    delta,
-                    SinkSpec(
-                        type="parquet",
-                        path=state_path,
-                        mode="merge",
-                        merge_key=(id_col, "cell"),
-                        merge_order=("nrm",),
-                        merge_buckets=merge_buckets,
-                    ),
-                ),
-            )
-        finally:
-            batch.unpersist()
+        cents = (
+            spark.read.parquet(centroid_path)
+            if _artifacts_ready(centroid_path)
+            else None
+        )
+        novel, delta, trained = incremental_semantic_dedup(
+            batch,
+            state,
+            cents,
+            vec_col=vec_col,
+            id_col=id_col,
+            k=k,
+            iters=iters,
+            threshold_micro=threshold_micro,
+            claim=claim,
+        )
+        writes = ()
+        if trained is not None:
+            writes = (lambda: trained.write.mode("overwrite").parquet(centroid_path),)
+        return novel, delta, writes
 
-    return _process
+    return _claim_tagged_sink(
+        state_path, corpus_path, (id_col, "cell"), ("nrm",),
+        merge_buckets, step,
+    )
 
 
 def incremental_semantic_two_level_sink(
@@ -539,86 +507,53 @@ def incremental_semantic_two_level_sink(
     threshold_micro: int = 250_000,
 ):
     """``foreachBatch`` body for the TWO-LEVEL continuous-crawl semantic
-    dedup loop (r6) — :func:`incremental_semantic_sink` past the flat-k
-    65536 broadcast cap: the first batch trains BOTH centroid levels
-    (persisted as ``{centroid_path}/coarse`` and ``/sub``), every later
-    batch assigns against the stored pair (two broadcast joins, no
-    retraining) and dedups on the leaf key (cell, scid). Same exactly-once
-    construction: batch-scoped idempotent corpus dirs, claim-tagged state
-    merge, deterministic trainers so replays are bit-identical.
+    dedup loop — :func:`incremental_semantic_sink` past the flat-k 65536
+    broadcast cap: the first batch trains BOTH centroid levels (persisted
+    as ``{centroid_path}/coarse`` and ``/sub``), every later batch assigns
+    against the stored pair (two broadcast joins, no retraining) and
+    dedups on the leaf key (cell, scid). Same exactly-once construction
+    (:func:`_claim_tagged_sink`), deterministic trainers so replays are
+    bit-identical.
 
-    The two centroid writes are not atomic; a crash between them leaves a
-    partial pair, so the loader treats ANY missing half as untrained and
-    the retry retrains both — deterministically identical, overwrite-safe."""
+    The two centroid writes are not atomic; ``sub`` is written last, so a
+    crash between them leaves coarse-without-sub. The loader treats ANY
+    missing half as untrained and the retry retrains both —
+    deterministically identical, overwrite-safe."""
     from ..operators.dedup import incremental_semantic_dedup_two_level
-    from ..session import run_independent_actions
-    from ..sinks.writer import read_merge_state, write_sink
-    from ..spec import SinkSpec
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
+    coarse_path, sub_path = f"{centroid_path}/coarse", f"{centroid_path}/sub"
+
+    def step(batch, state, claim):
         spark = batch.sparkSession
-        batch = batch.persist()
-        try:
-            # existence probe on BOTH halves (a partial pair is untrained —
-            # the crash-mid-pair rule); read errors on present halves
-            # surface rather than silently retraining (r13 review finding)
-            cents = (
-                (
-                    spark.read.parquet(f"{centroid_path}/coarse"),
-                    spark.read.parquet(f"{centroid_path}/sub"),
-                )
-                if _artifacts_ready(
-                    f"{centroid_path}/coarse", f"{centroid_path}/sub"
-                )
-                else None
+        cents = (
+            (spark.read.parquet(coarse_path), spark.read.parquet(sub_path))
+            if _artifacts_ready(coarse_path, sub_path)
+            else None
+        )
+        novel, delta, trained = incremental_semantic_dedup_two_level(
+            batch,
+            state,
+            cents,
+            vec_col=vec_col,
+            id_col=id_col,
+            coarse_k=coarse_k,
+            sub_k=sub_k,
+            iters=iters,
+            threshold_micro=threshold_micro,
+            claim=claim,
+        )
+        writes = ()
+        if trained is not None:
+            writes = (
+                lambda: trained[0].write.mode("overwrite").parquet(coarse_path),
+                lambda: trained[1].write.mode("overwrite").parquet(sub_path),
             )
-            state = (
-                read_merge_state(spark, state_path)
-                if _artifacts_ready(state_path)
-                else None
-            )
-            novel, delta, trained = incremental_semantic_dedup_two_level(
-                batch,
-                state,
-                cents,
-                vec_col=vec_col,
-                id_col=id_col,
-                coarse_k=coarse_k,
-                sub_k=sub_k,
-                iters=iters,
-                threshold_micro=threshold_micro,
-                claim=F.lit(batch_id),
-            )
-            if trained is not None:
-                # persist BEFORE corpus/state writes; sub last so a partial
-                # pair is always coarse-without-sub (→ loader retrains)
-                trained[0].write.mode("overwrite").parquet(
-                    f"{centroid_path}/coarse"
-                )
-                trained[1].write.mode("overwrite").parquet(f"{centroid_path}/sub")
-            # centroid pair committed first (crash rule above); corpus
-            # append ∥ state merge are independent and idempotent in ANY
-            # completion order (r16, guide §2.6)
-            run_independent_actions(
-                lambda: novel.write.mode("overwrite").parquet(
-                    f"{corpus_path}/ingest_batch={batch_id}"
-                ),
-                lambda: write_sink(
-                    delta,
-                    SinkSpec(
-                        type="parquet",
-                        path=state_path,
-                        mode="merge",
-                        merge_key=(id_col, "cell"),
-                        merge_order=("nrm",),
-                        merge_buckets=merge_buckets,
-                    ),
-                ),
-            )
-        finally:
-            batch.unpersist()
+        return novel, delta, writes
 
-    return _process
+    return _claim_tagged_sink(
+        state_path, corpus_path, (id_col, "cell"), ("nrm",),
+        merge_buckets, step,
+    )
 
 
 def run_incremental_semantic_stream(
@@ -637,24 +572,20 @@ def run_incremental_semantic_stream(
     to completion (availableNow — bounded replay of the unbounded crawl;
     the checkpoint + claim-tagged state give exactly-once across restarts,
     same contract as :func:`run_incremental_dedup_stream`)."""
-    q = (
-        vectors.writeStream.foreachBatch(
-            incremental_semantic_sink(
-                state_path,
-                corpus_path,
-                centroid_path,
-                vec_col=vec_col,
-                id_col=id_col,
-                merge_buckets=merge_buckets,
-                k=k,
-                threshold_micro=threshold_micro,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        vectors,
+        incremental_semantic_sink(
+            state_path,
+            corpus_path,
+            centroid_path,
+            vec_col=vec_col,
+            id_col=id_col,
+            merge_buckets=merge_buckets,
+            k=k,
+            threshold_micro=threshold_micro,
+        ),
+        checkpoint,
     )
-    q.awaitTermination()
 
 
 def run_incremental_semantic_two_level_stream(
@@ -675,25 +606,21 @@ def run_incremental_semantic_two_level_stream(
     — bounded replay of the unbounded crawl; checkpoint + claim-tagged
     state give exactly-once across restarts, same contract as
     :func:`run_incremental_semantic_stream`)."""
-    q = (
-        vectors.writeStream.foreachBatch(
-            incremental_semantic_two_level_sink(
-                state_path,
-                corpus_path,
-                centroid_path,
-                vec_col=vec_col,
-                id_col=id_col,
-                merge_buckets=merge_buckets,
-                coarse_k=coarse_k,
-                sub_k=sub_k,
-                threshold_micro=threshold_micro,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        vectors,
+        incremental_semantic_two_level_sink(
+            state_path,
+            corpus_path,
+            centroid_path,
+            vec_col=vec_col,
+            id_col=id_col,
+            merge_buckets=merge_buckets,
+            coarse_k=coarse_k,
+            sub_k=sub_k,
+            threshold_micro=threshold_micro,
+        ),
+        checkpoint,
     )
-    q.awaitTermination()
 
 
 def _artifacts_ready(*paths: str) -> bool:
@@ -722,10 +649,9 @@ def _artifacts_ready(*paths: str) -> bool:
     return all(_committed(p) for p in paths)
 
 
-#: fused catch-up chunk size (r17, guide §1.2/§2.6): a multi-version
-#: catch-up computes at most this many adjacent-pair diffs as ONE
-#: persisted span plan instead of one plan per version. Bounds the span
-#: cache at this many commits' changed rows.
+#: catch-up chunk size: a tail computes at most this many adjacent-pair
+#: diffs as ONE persisted span plan. Bounds the span cache at this many
+#: commits' changed rows.
 _FUSE_SPAN = 16
 
 
@@ -737,12 +663,12 @@ def _tail_versions(
     to_version: int | None,
     tmp_prefix: str,
     apply,
-    span_feed=None,
+    span_feed,
     max_span: int | None = None,
 ) -> int:
-    """The shared version-tail protocol (`_run_cdc_tail`'s discipline,
-    factored once for every CDC-fed composition — r13 review finding: two
-    verbatim copies had already appeared): load the fsync'd checkpoint
+    """The version-tail protocol shared by every CDC consumer (the four
+    ``run_cdc_*_ingest`` compositions and the declarative tail,
+    ``plans/compiler._run_cdc_tail``): load the fsync'd checkpoint
     (corrupt → ConfigError naming the file; delivery is idempotent so
     deleting it restarts safely), guard the upstream pointer, apply
     committed versions in order via ``apply(v, batch)``, and advance the
@@ -750,36 +676,29 @@ def _tail_versions(
     exactly one version, which every ``apply`` body must make idempotent.
     Returns the last applied version.
 
-    FUSED CATCH-UP (r17 optimization, guide §1.2/§2.6 — VERDICT r16 item
-    1): with ``span_feed`` given, a catch-up of ≥2 pending versions
-    computes its per-pair diffs as ONE ``table_changes(start, to,
-    per_version=True)`` plan per ≤``_FUSE_SPAN`` chunk,
-    persisted once; each version's increment is then a filter on
-    ``_commit_version`` over the cached span, and version presence (the
-    per-version emptiness probe) comes from ONE distinct-collect instead
-    of one ``limit(1).count()`` job per version. The span union is the
-    SAME per-pair ``snapshot_diff`` construction the per-version read
-    runs (``sinks/changes.table_changes``), so each version's slice is
-    bit-equal to its single-pair feed; state merges still run strictly in
-    version order with per-version claims, and the checkpoint still
-    advances after EACH version — a crash mid-chunk resumes by building a
-    fresh span from the last committed version, re-running exactly one
-    version idempotently, the unchanged contract.
+    Pending versions are read in chunks of at most ``_FUSE_SPAN``: each
+    chunk is ONE ``span_feed(lo, hi)`` plan, persisted once; version
+    presence comes from one distinct-collect over it, and each present
+    version's increment is a filter on ``_commit_version`` over the
+    cached span. A one-version catch-up is a one-version span. The span
+    union is the same per-pair ``snapshot_diff`` construction a
+    single-pair read runs (``sinks/changes.table_changes``), so each
+    slice is bit-equal to that version's own feed; a crash mid-chunk
+    resumes by building a fresh span from the last committed version.
 
-    ``span_feed(lo, hi)`` returns the composition's version-tagged feed
-    for ``(lo, hi]`` — already filtered/projected exactly like its
-    per-version batch, PLUS the ``_commit_version`` column, so a version
-    absent from the span is precisely one whose per-version emptiness
-    probe would have skipped it. ``apply(v, batch)``: ``batch`` is the
-    (non-empty) cached span slice in fused mode, or None in per-version
-    mode (``apply`` computes and probes its own per-version feed — the
-    path a 1-version tail and a ``span_feed=None`` caller take).
+    ``span_feed(lo, hi)`` returns the consumer's feed for ``(lo, hi]``,
+    already filtered/projected, PLUS the ``_commit_version`` column.
+    ``apply(v, batch)`` receives version v's NON-EMPTY slice with that
+    column dropped; a version absent from the span is an empty increment
+    — the checkpoint advances with no ``apply`` call, so no consumer ever
+    trains artifacts on, or commits a no-op state version for, an empty
+    batch.
 
-    ``max_span``: a composition-specific ceiling on the chunk size —
-    the shared default is tuned for row-light feeds (postings rows,
-    vectors); a PAYLOAD-heavy feed (the image composition: raw encoded
-    bytes ride the span cache until its last version applies) passes a
-    lower bound so the pinned bytes stay ~that many commits deep."""
+    ``max_span``: a consumer-specific ceiling on the chunk size — the
+    default is tuned for row-light feeds (postings rows, vectors); a
+    PAYLOAD-heavy feed (the image composition: raw encoded bytes ride
+    the span cache until its last version applies) passes a lower bound
+    so the pinned bytes stay ~that many commits deep."""
     import json as _json
     import os
     import tempfile
@@ -793,6 +712,9 @@ def _tail_versions(
     os.makedirs(ck_dir, exist_ok=True)
     ck_file = os.path.join(ck_dir, "offset.json")
     start = from_version
+    # open-and-catch, not exists→open (TOCTOU discipline): a missing
+    # checkpoint means "start from from_version"; a PRESENT but unreadable
+    # one must not silently reprocess delivered versions
     try:
         with open(ck_file) as f:
             start = max(start, int(_json.load(f)["last_version"]))
@@ -800,23 +722,13 @@ def _tail_versions(
         pass
     except (ValueError, KeyError, TypeError) as exc:
         raise ConfigError(
-            f"corrupt CDC ingest checkpoint {ck_file!r} ({exc}); delete it "
-            "to restart from from_version (per-version delivery is "
-            "idempotent)"
+            f"corrupt CDC checkpoint {ck_file!r} ({exc}); delete it to "
+            "restart from from_version (per-version delivery is idempotent)"
         ) from exc
     current = _current_version(source_path)
     to_v = current if to_version is None else min(current, to_version)
-    last = start
-    chunk = _FUSE_SPAN
-    if max_span is not None:
-        chunk = min(chunk, max(1, max_span))
-    if span_feed is None or chunk < 2 or to_v - start < 2:
-        for v in range(start + 1, to_v + 1):
-            apply(v, None)
-            _fsync_write(ck_file, _json.dumps({"last_version": v}))
-            last = v
-        return last
-    lo = start
+    chunk = _FUSE_SPAN if max_span is None else min(_FUSE_SPAN, max(1, max_span))
+    last = lo = start
     while lo < to_v:
         hi = min(lo + chunk, to_v)
         # scoped AQE-in-cache: the span plan materializes once with
@@ -840,9 +752,8 @@ def _tail_versions(
                                 F.col(COMMIT_VERSION_COL) == v
                             ).drop(COMMIT_VERSION_COL),
                         )
-                    # an absent version is an empty increment: checkpoint
-                    # advances, no writes (the per-version probe's exact
-                    # skip rule)
+                    # an absent version is an empty increment: the
+                    # checkpoint advances with no apply call
                     _fsync_write(ck_file, _json.dumps({"last_version": v}))
                     last = v
             finally:
@@ -851,31 +762,15 @@ def _tail_versions(
     return last
 
 
-def _version_batch(
-    spark: SparkSession, source_path: str, keys: list[str], v: int,
-    id_col: str, vec_col: str,
-) -> DataFrame:
-    """Version v's NEW CONTENT: the per-version change feed filtered to
-    insert/update_postimage (delete/update_preimage rows are state
-    mirror-keeping, not corpus content), projected to (id, vector)."""
-    from ..sinks.changes import CHANGE_TYPE_COL, table_changes
-
-    return (
-        table_changes(spark, source_path, keys, v - 1, v, per_version=True)
-        .filter(F.col(CHANGE_TYPE_COL).isin("insert", "update_postimage"))
-        .select(id_col, vec_col)
-    )
-
-
 def _span_batch(
     spark: SparkSession, source_path: str, keys: list[str],
     lo: int, hi: int, id_col: str, vec_col: str,
 ) -> DataFrame:
-    """The fused-catch-up sibling of :func:`_version_batch` (r17): every
-    version in ``(lo, hi]``'s new content in ONE per-version change-feed
-    plan, tagged by ``_commit_version`` — each version's slice is
-    bit-equal to its :func:`_version_batch` (same per-pair snapshot
-    diffs, same filter/projection)."""
+    """The ``span_feed`` of the vector and image compositions: every
+    version in ``(lo, hi]``'s NEW CONTENT in one per-version change-feed
+    plan — insert/update_postimage rows only (delete/update_preimage rows
+    are state mirror-keeping, not corpus content), projected to (id,
+    value) and tagged by ``_commit_version``."""
     from ..sinks.changes import (
         CHANGE_TYPE_COL,
         COMMIT_VERSION_COL,
@@ -907,16 +802,15 @@ def run_cdc_semantic_ingest(
     iters: int = 2,
     threshold_micro: int = 250_000,
 ) -> int:
-    """CDC tail × semantic dedup composition (r13, VERDICT r12 item 4) —
-    the production wiring for continuous training-data ingest: a
-    ``table_changes`` follow-mode feed over an upstream merge-sink table
+    """CDC tail × semantic dedup composition — the production wiring for
+    continuous training-data ingest: a ``table_changes`` follow-mode feed
+    over an upstream merge-sink table
     drives :func:`incremental_semantic_two_level_sink`, one per-commit
     increment per ``foreachBatch``-style call, with the COMMIT VERSION as
     the batch id / exactly-once claim.
 
-    Version-tail discipline is :func:`_tail_versions` (`_run_cdc_tail`'s,
-    shared with the ANN sibling); both halves of a re-run version are
-    idempotent by construction:
+    Version-tail discipline is the shared :func:`_tail_versions`; both
+    halves of a re-run version are idempotent by construction:
 
     - the corpus write lands under ``ingest_batch=<version>`` (overwrite —
       bit-equal recompute, per the deterministic trainer/assigner);
@@ -925,11 +819,11 @@ def run_cdc_semantic_ingest(
       (the against-state lookup ignores its own claims) and converges to
       the same survivors instead of dropping the batch as all-duplicate.
 
-    An EMPTY increment (delete-only or no-op commit) just advances the
-    checkpoint — it must never train the centroid pair on an empty batch
-    (which would persist empty centroids and silently drop every later
-    version's content) nor bump a no-op state version (r14 advisor
-    finding; same guard as :func:`run_cdc_ann_index_ingest`).
+    An EMPTY increment (delete-only or no-op commit) never reaches the
+    sink — :func:`_tail_versions` advances the checkpoint without an
+    ``apply`` call — so the centroid pair is never trained on an empty
+    batch (which would persist empty centroids and silently drop every
+    later version's content) and no no-op state version is committed.
 
     At 100 TB: per version the feed is a changed-bucket pruned diff, the
     dedup is assign-only against broadcast centroids + the bucket-pruned
@@ -951,24 +845,9 @@ def run_cdc_semantic_ingest(
         threshold_micro=threshold_micro,
     )
 
-    def apply(v: int, batch: DataFrame | None) -> None:
-        if batch is None:
-            batch = _version_batch(spark, source_path, keys, v, id_col, vec_col)
-            if not batch.limit(1).count():
-                # empty increment (delete-only or no-op commit): never train
-                # the centroid pair on an empty batch — that would persist
-                # empty centroids and silently drop ALL later corpus content
-                # — and never bump a no-op state version that could expire
-                # retained snapshots; checkpoint still advances (r14 advisor
-                # finding, mirroring run_cdc_ann_index_ingest's guard);
-                # fused catch-ups skip absent versions from the span's one
-                # presence collect instead
-                return
-        process(batch, v)
-
     return _tail_versions(
         spark, source_path, checkpoint, from_version, to_version,
-        "ckpt_cdc_sem_", apply,
+        "ckpt_cdc_sem_", lambda v, batch: process(batch, v),
         span_feed=lambda lo, hi: _span_batch(
             spark, source_path, keys, lo, hi, id_col, vec_col
         ),
@@ -988,11 +867,11 @@ def run_cdc_postings_ingest(
     merge_buckets: int = 64,
     delete_col: str | None = None,
 ) -> int:
-    """CDC tail × persisted BM25 postings index (r14, VERDICT r13 item 3)
-    — continuous lexical-index maintenance, the third ``_tail_versions``
-    composition: a ``table_changes`` follow-mode feed over an upstream
-    documents merge table keeps the term-bucketed postings + stats deltas
-    current, one committed version per increment, via
+    """CDC tail × persisted BM25 postings index — continuous
+    lexical-index maintenance under :func:`_tail_versions`: a
+    ``table_changes`` follow-mode feed over an upstream documents merge
+    table keeps the term-bucketed postings + stats deltas current, one
+    committed version per increment, via
     :func:`...operators.search.bm25_index_delta`:
 
     * insert/update_postimage rows re-tokenize ASSIGN-ONLY into postings
@@ -1008,16 +887,20 @@ def run_cdc_postings_ingest(
     carrying the last live text and cascade into the index as tombstones
     (the full right-to-be-forgotten path, upstream to serving).
 
-    An EMPTY increment (no-op re-commit) advances the checkpoint only —
-    no empty stats dir, no no-op postings version. Redelivery of a
-    version is idempotent end to end (same rows at the same
-    ``_ingest_version``, same stats dir content). No training artifacts
-    exist on this path, so there is no first-increment deferral to get
-    wrong. Returns the last applied version."""
+    An EMPTY increment (no-op re-commit) advances the checkpoint only
+    (the :func:`_tail_versions` rule) — no empty stats dir, no no-op
+    postings version. Redelivery of a version is idempotent end to end
+    (same rows at the same ``_ingest_version``, same stats dir content).
+    No training artifacts exist on this path, so there is no
+    first-increment deferral to get wrong. Returns the last applied
+    version."""
     from ..operators.search import bm25_index_delta
     from ..sinks.changes import CHANGE_TYPE_COL, table_changes
 
-    def delta(v: int, feed: DataFrame) -> None:
+    def apply(v: int, feed: DataFrame) -> None:
+        # the slice filters the persisted span cache: every feed row is
+        # consumed (insert/update_postimage → new, delete/update_preimage
+        # → old) by several actions without recomputing the diff
         ct = F.col(CHANGE_TYPE_COL)
         bm25_index_delta(
             feed.filter(ct.isin("insert", "update_postimage")).select(
@@ -1032,38 +915,6 @@ def run_cdc_postings_ingest(
             text_col=text_col,
             merge_buckets=merge_buckets,
         )
-
-    def apply(v: int, feed: DataFrame | None) -> None:
-        if feed is not None:
-            # fused catch-up (r17): the slice filters the persisted span
-            # cache — already materialized once, non-empty by the span's
-            # presence collect; no second persist, no emptiness job
-            delta(v, feed)
-            return
-        # persist: every feed row is consumed (insert/update_postimage →
-        # new, delete/update_preimage → old), and the delta body runs
-        # several actions over both halves — without the cache the
-        # per-version full-outer snapshot diff would recompute ~6× per
-        # increment (r14 review finding); the emptiness probe is ONE job
-        # on the cached feed (empty feed ⟺ both halves empty, since the
-        # four change types partition it)
-        from ..session import aqe_cached_plan_scope
-
-        # scoped AQE-in-cache: the feed plan (pruned full-outer diff)
-        # materializes once with runtime coalescing/broadcasts; the scope
-        # must open BEFORE .persist() — the flag binds at cache
-        # registration (see session.aqe_cached_plan_scope)
-        with aqe_cached_plan_scope(spark):
-            feed = table_changes(
-                spark, source_path, keys, v - 1, v, per_version=True,
-                delete_col=delete_col,
-            ).persist()
-            try:
-                if not feed.limit(1).count():
-                    return  # empty increment: checkpoint advances, no writes
-                delta(v, feed)
-            finally:
-                feed.unpersist()
 
     return _tail_versions(
         spark, source_path, checkpoint, from_version, to_version,
@@ -1091,7 +942,7 @@ def run_cdc_ann_index_ingest(
     n_codes: int = 16,
     merge_buckets: int = 64,
 ) -> int:
-    """CDC tail × persisted ANN index composition (r13) — continuous index
+    """CDC tail × persisted ANN index composition — continuous index
     maintenance, the sibling of :func:`run_cdc_semantic_ingest`: a
     ``table_changes`` follow-mode feed over an upstream embeddings merge
     table keeps the IVF-PQ index current, one committed version per
@@ -1105,15 +956,15 @@ def run_cdc_ann_index_ingest(
     BEFORE any index write; every later increment probes their existence
     explicitly (:func:`_artifacts_ready` — a read error on a present
     artifact surfaces, it never silently retrains) and assigns only. An
-    EMPTY increment (delete-only or no-op commit) just advances the
-    checkpoint — it must never train empty artifacts or bump a no-op
-    state version (r13 review finding).
+    EMPTY increment (delete-only or no-op commit) never reaches ``apply``
+    (the :func:`_tail_versions` rule), so no empty artifacts are trained
+    and no no-op state version is committed.
 
     Index deltas upsert through the merge sink on ``(cand_id, s)``
     ordered by the monotone ``_ingest_version`` column — so when an
     upstream UPDATE re-assigns a vector, the LATEST version's codes win
-    regardless of how the code numbers happen to compare (r13 review
-    finding: ordering by ``code`` kept whichever code sorted higher).
+    regardless of how the code numbers happen to compare (ordering by
+    ``code`` would keep whichever code sorted higher).
     Redelivery of a version rewrites the same (key, version) rows —
     idempotent with no claim machinery.
 
@@ -1123,7 +974,7 @@ def run_cdc_ann_index_ingest(
     the search side re-ranks against the CURRENT corpus, so stale entries
     cost shortlist slots, never wrong vectors. Reconcile on the
     deployment's schedule with
-    :func:`...operators.similarity.ann_index_compact` (r14) — an
+    :func:`...operators.similarity.ann_index_compact` — an
     anti-join against the current corpus keys rewriting only the stale
     ids' buckets, after which the index is bit-identical to a fresh
     assign of the current corpus against the same frozen artifacts.
@@ -1146,13 +997,8 @@ def run_cdc_ann_index_ingest(
         merge_buckets=merge_buckets,
     )
 
-    def apply(v: int, batch: DataFrame | None) -> None:
-        known_nonempty = batch is not None
-        if batch is None:
-            batch = _version_batch(spark, source_path, keys, v, id_col, vec_col)
+    def apply(v: int, batch: DataFrame) -> None:
         if not _artifacts_ready(cents_path, cb_path):
-            if not known_nonempty and not batch.limit(1).count():
-                return  # nothing to train on or index; checkpoint advances
             cents, cb = ivf_pq_index_train(
                 batch,
                 id_col=id_col,
@@ -1170,8 +1016,6 @@ def run_cdc_ann_index_ingest(
             # centroids-without-codebook (→ next increment retrains both)
             cents.write.mode("overwrite").parquet(cents_path)
             cb.write.mode("overwrite").parquet(cb_path)
-        elif not known_nonempty and not batch.limit(1).count():
-            return  # empty increment: no no-op state version
         write_sink(
             ivf_pq_index_assign(
                 batch,
@@ -1204,74 +1048,43 @@ def incremental_image_sink(
     merge_buckets: int = 64,
 ):
     """``foreachBatch`` body for the continuous-crawl IMAGE near-dup loop
-    (r16, VERDICT r15 item 5's streaming half) — the perceptual sibling
-    of :func:`incremental_dedup_sink`: each batch of ``(id, payload)``
-    images is dHashed over real decoded pixels
+    — the perceptual sibling of :func:`incremental_dedup_sink`: each batch
+    of ``(id, payload)`` images is dHashed over real decoded pixels
     (:func:`...operators.images.image_dhash` — one Arrow pass) and
     deduped against the persisted ``(band, bkey, img_id, dhash)`` band
     index via :func:`...operators.images.incremental_image_neardup`;
     survivors' payload rows land in a batch-scoped idempotent corpus dir
     and their band rows merge claim-tagged into the state.
 
-    Same exactly-once construction as every sibling sink: the corpus
-    write is ``ingest_batch=<batch_id>`` overwrite (hashing is
-    deterministic, so a replay recomputes bit-identically), the state
-    merge is claim-tagged so a retry whose merge already committed
-    reconstructs the pre-batch state view instead of dropping the batch
-    as all-duplicate. Undecodable payloads pass through as novel corpus
-    rows and never enter the index (NULL-hash contract)."""
+    Same exactly-once construction as every sibling sink
+    (:func:`_claim_tagged_sink`; hashing is deterministic, so a replay
+    recomputes bit-identically). The step joins the survivors back to
+    their payloads before the corpus write. Undecodable payloads pass
+    through as novel corpus rows and never enter the index (NULL-hash
+    contract)."""
     from ..operators.images import image_dhash, incremental_image_neardup
-    from ..session import run_independent_actions
-    from ..sinks.writer import read_merge_state, write_sink
-    from ..spec import SinkSpec
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        batch = batch.persist()
-        try:
-            hashes = image_dhash(
-                batch.select(F.col(id_col), F.col(payload_col)), id_col=id_col
-            ).select(id_col, "dhash")
-            state = (
-                read_merge_state(spark, state_path)
-                if _artifacts_ready(state_path)
-                else None
-            )
-            novel, delta = incremental_image_neardup(
-                hashes,
-                state,
-                id_col=id_col,
-                bands=bands,
-                max_hamming=max_hamming,
-                claim=F.lit(batch_id),
-            )
-            # corpus write ∥ state merge (r16, guide §2.6): the two
-            # actions are mutually independent and each is idempotent in
-            # ANY completion order — the corpus dir is a batch-scoped
-            # overwrite, the merge claim-tagged — which is exactly the
-            # crash contract above; overlapping them hides one action's
-            # driver planning tail under the other's execution
-            run_independent_actions(
-                lambda: novel.join(batch, on=id_col, how="inner")
-                .select(id_col, payload_col, "dhash")
-                .write.mode("overwrite")
-                .parquet(f"{corpus_path}/ingest_batch={batch_id}"),
-                lambda: write_sink(
-                    delta,
-                    SinkSpec(
-                        type="parquet",
-                        path=state_path,
-                        mode="merge",
-                        merge_key=(id_col, "band"),
-                        merge_order=("bkey",),
-                        merge_buckets=merge_buckets,
-                    ),
-                ),
-            )
-        finally:
-            batch.unpersist()
+    def step(batch, state, claim):
+        hashes = image_dhash(
+            batch.select(F.col(id_col), F.col(payload_col)), id_col=id_col
+        ).select(id_col, "dhash")
+        novel, delta = incremental_image_neardup(
+            hashes,
+            state,
+            id_col=id_col,
+            bands=bands,
+            max_hamming=max_hamming,
+            claim=claim,
+        )
+        corpus = novel.join(batch, on=id_col, how="inner").select(
+            id_col, payload_col, "dhash"
+        )
+        return corpus, delta, ()
 
-    return _process
+    return _claim_tagged_sink(
+        state_path, corpus_path, (id_col, "band"), ("bkey",),
+        merge_buckets, step,
+    )
 
 
 def run_cdc_image_ingest(
@@ -1289,7 +1102,7 @@ def run_cdc_image_ingest(
     max_hamming: int = 6,
     merge_buckets: int = 64,
 ) -> int:
-    """CDC tail × incremental image near-dup composition (r16) — the
+    """CDC tail × incremental image near-dup composition — the
     fourth CDC-fed composition beside the semantic / ANN-index / postings
     siblings: a ``table_changes`` follow-mode feed over an upstream image
     merge table (crawled payloads keyed by image id) drives
@@ -1299,10 +1112,9 @@ def run_cdc_image_ingest(
     Version-tail discipline is the shared :func:`_tail_versions`; both
     halves of a re-run version are idempotent (batch-scoped corpus
     overwrite + claim-tagged state merge). An EMPTY increment
-    (delete-only or no-op commit) just advances the checkpoint — it must
-    never bump a no-op state version that could expire retained
-    snapshots (the sibling sinks' guard). Deleted images are not
-    retired from the band index inline — the stale-until-maintenance
+    (delete-only or no-op commit) only advances the checkpoint, so no
+    no-op state version can expire retained snapshots. Deleted images are
+    not retired from the band index inline — the stale-until-maintenance
     posture of the ANN sibling; reconcile with
     :func:`...sinks.writer.compact_merge_state` on the deployment's
     schedule.
@@ -1324,43 +1136,14 @@ def run_cdc_image_ingest(
         merge_buckets=merge_buckets,
     )
 
-    def apply(v: int, batch: DataFrame | None) -> None:
-        if batch is not None:
-            # fused catch-up (r17): the slice filters the persisted span
-            # cache — materialized once for the whole catch-up, non-empty
-            # by the span's presence collect (no per-version probe job);
-            # _process's own persist caches only the tiny slice plan
-            process(batch, v)
-            return
-        # persist BEFORE the emptiness probe so the change-feed diff runs
-        # once per version — the probe and the sink body share the cached
-        # feed (the postings sibling's discipline); _process's own persist
-        # of the same frame is a same-level no-op and its unpersist is
-        # re-run harmlessly here
-        from ..session import aqe_cached_plan_scope
-
-        # scoped AQE-in-cache for the feed plan's one materialization; the
-        # scope must open BEFORE .persist() — the flag binds at cache
-        # registration (see session.aqe_cached_plan_scope)
-        with aqe_cached_plan_scope(spark):
-            batch = _version_batch(
-                spark, source_path, keys, v, id_col, payload_col
-            ).persist()
-            try:
-                if not batch.limit(1).count():
-                    return  # empty: checkpoint advances, no state bump
-                process(batch, v)
-            finally:
-                batch.unpersist()
-
     return _tail_versions(
         spark, source_path, checkpoint, from_version, to_version,
-        "ckpt_cdc_img_", apply,
+        "ckpt_cdc_img_", lambda v, batch: process(batch, v),
         span_feed=lambda lo, hi: _span_batch(
             spark, source_path, keys, lo, hi, id_col, payload_col
         ),
         # payload-heavy feed: the span cache carries raw image bytes
         # until its last version applies — bound the pinned bytes at 4
-        # commits regardless of the row-light default (post-review r17)
+        # commits regardless of the row-light default
         max_span=4,
     )

@@ -1,12 +1,10 @@
-"""Fused CDC catch-up (r17, VERDICT r16 item 1): a multi-version tail
-computes its per-pair diffs as ONE persisted span plan per chunk instead
-of one plan + emptiness probe per version. These tests pin the contract:
-the fused path is value-invisible — same index/state/corpus content as
-driving the tail one version per call (each call then has a single
-pending version and takes the per-version path), empty versions still
-advance the checkpoint without a state bump, splitting a catch-up into
-several spans does not change results, and a resume mid-catch-up
-converges to the one-shot result."""
+"""Fused CDC catch-up: a multi-version tail computes its per-pair diffs
+as ONE persisted span plan per chunk. These tests pin the contract: the
+span size is value-invisible — same index/state/corpus content as
+driving the tail one version per call (each call then reads a
+one-version span), empty versions still advance the checkpoint without a
+state bump, splitting a catch-up into several spans does not change
+results, and a resume mid-catch-up converges to the one-shot result."""
 
 from __future__ import annotations
 
@@ -93,8 +91,8 @@ def test_fused_image_matches_per_version_and_resumes(spark, tmp_path):
     """The image composition's fused catch-up keeps the per-version claim
     semantics (batch 2's state probe sees batch 1's committed rows, never
     its own claims): a fused 2-version drive and a resumed drive (version
-    1 alone, then the rest — one version per call, the per-version path)
-    land on identical state + corpus content."""
+    1 alone, then the rest — one one-version span per call) land on
+    identical state + corpus content."""
     up = _upstream(spark, tmp_path)
     f_state, f_corpus, f_ckpt = _paths(tmp_path, "fused")
     assert run_cdc_image_ingest(

@@ -50,55 +50,6 @@ def test_unknown_partitioning_type():
         load_spec(_with({"type": "range", "column": "ts"}))
 
 
-def test_register_partitioning_strategy_end_to_end(spark, tmp_path):
-    """The Partitioning SPI (reference Partitioning.java:1-12, name lookup
-    MapReduceExecutor.java:129-137): a registered toy modulo strategy
-    resolves through the spec, buckets the sink layout by id % 4, and
-    unregisters cleanly (after which the type is unknown again)."""
-    from pyspark.sql import functions as F
-
-    from embulk_executor_mapreduce_spark.operators.partitioning import (
-        _PARTITIONING_REGISTRY,
-        register_partitioning,
-    )
-    from embulk_executor_mapreduce_spark.plans.compiler import run_pipeline
-
-    def modulo(df, p):
-        return F.pmod(F.col(p.column), F.lit(4)).cast("long")
-
-    def check(p):
-        if not p.column:
-            raise PartitionError("modulo partitioning needs a column")
-
-    register_partitioning("modulo", modulo, check)
-    try:
-        with pytest.raises(PartitionError, match="needs a column"):
-            load_spec(_with({"type": "modulo"}))
-
-        src = str(tmp_path / "src")
-        out = str(tmp_path / "out")
-        spark.range(40).select(F.col("id")).write.parquet(src)
-        spec = load_spec(
-            {
-                "in": {"type": "parquet", "path": src},
-                "exec": {"partitioning": {"type": "modulo", "column": "id"}},
-                "out": {"type": "parquet", "path": out, "partition_by_bucket": True},
-            }
-        )
-        run_pipeline(spark, spec)
-        from pathlib import Path
-
-        buckets = sorted(
-            p.name for p in Path(out).iterdir() if p.name.startswith("__bucket")
-        )
-        assert len(buckets) == 4, buckets
-        assert spark.read.parquet(out).count() == 40
-    finally:
-        del _PARTITIONING_REGISTRY["modulo"]
-    with pytest.raises(PartitionError, match="known strategies"):
-        load_spec(_with({"type": "modulo", "column": "id"}))
-
-
 def test_missing_partition_column():
     with pytest.raises(PartitionError):
         load_spec(_with({"type": "timestamp", "unit": "hour"}))

@@ -212,7 +212,8 @@ def test_cdc_tail_stream_equals_batch_and_retry_idempotence(spark, state3):
     a retry that re-runs an already-written version (crash after write,
     before the checkpoint advance), and resume incrementally — a later
     call with the same checkpoint processes only newly committed
-    versions."""
+    versions, and a version with an empty feed (an identical re-commit)
+    advances the checkpoint without a partition."""
     import json
     import os
 
@@ -266,16 +267,43 @@ def test_cdc_tail_stream_equals_batch_and_retry_idempotence(spark, state3):
         merge_buckets=8,
         merge_keep_versions=3,
     )
-    write_sink(
-        spark.createDataFrame([(7, 0, "TAIL")], "k bigint, o int, s string"),
-        sink,
-    )  # v3
+    for _ in range(2):
+        write_sink(
+            spark.createDataFrame([(7, 0, "TAIL")], "k bigint, o int, s string"),
+            sink,
+        )  # v3, then an identical re-commit v4 whose feed is empty
     doc3 = dict(spec_doc)
     doc3["in"] = {k: v for k, v in spec_doc["in"].items() if k != "to_version"}
     r3 = run_pipeline_streaming(spark, load_spec(doc3))
     v3_rows = key(table_changes(spark, state3, ["k"], 2, 3, per_version=True))
     assert r3.input_rows == len(v3_rows) > 0
     assert key(read_out()) == sorted(batch_rows + v3_rows)
+    # the empty v4 advances the checkpoint with no sink write
+    with open(os.path.join(ck, "offset.json")) as f:
+        assert json.load(f) == {"last_version": 4}
+    assert not os.path.exists(os.path.join(out, "_commit_version=4"))
+
+
+def test_cdc_tail_reads_one_span_per_poll(spark, state3, monkeypatch, tmp_path):
+    """The declarative tail runs the shared version-tail loop: a 2-version
+    catch-up reads the change feed once, as one (0, 2] span, and slices
+    each version out of it."""
+    from embulk_executor_mapreduce_spark.sinks import changes
+
+    real = changes.table_changes
+    calls = []
+
+    def spy(spark_, path, keys, from_version, to_version=None, **kw):
+        calls.append((from_version, to_version))
+        return real(spark_, path, keys, from_version, to_version, **kw)
+
+    monkeypatch.setattr(changes, "table_changes", spy)
+    out = str(tmp_path / "o")
+    doc = {"in": _cdc_in(state3), "out": {"type": "parquet", "path": out}}
+    assert run_pipeline_streaming(spark, load_spec(doc)).succeeded
+    assert calls == [(0, 2)]
+    parts = spark.read.parquet(out).select("_commit_version").distinct()
+    assert {r[0] for r in parts.collect()} == {1, 2}
 
 
 def test_cdc_tail_into_downstream_merge_mirror(spark, state3):
